@@ -9,13 +9,11 @@ Each query is fully materialized via count() on the result (no collect of
 payload — mirrors the reference's sink-side accounting, where throughput
 is rows landed per second, docs/dev/introduction.md:59-94).
 
-Cross-ROUND comparisons need the ``env`` block: the sandbox host's
-absolute speed drifts between rounds.  Measured r6: the UNCHANGED round-4
-checkout re-benched on the round-6 host scored 14.375 s against its
-recorded 9.321 s (+54% on identical code and data, idle host both times)
-— so only same-host same-day numbers are comparable, and the honest
-cross-round signal is A/B of two checkouts on one host, which
-``tools/driver_sim.py`` and a ``git worktree`` of the prior round give.
+Absolute numbers are only comparable on one host on one day: host speed
+drifts (an unchanged checkout re-benched +54% on identical code and data),
+so the ``env`` block in BENCH_DETAIL records the host load.  Comparing two
+checkouts is perfbench's job (``perfbench/run.py``, run on both in
+alternating pairs), not this harness's.
 """
 
 from __future__ import annotations
@@ -23,19 +21,12 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import subprocess
 import sys
 import tempfile
 import time
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-
-# The honest cross-round signal (see module docstring): bench a PRIOR
-# checkout back-to-back on the same host and report the ratio.  Updated
-# each round to the previous round's final commit.  Disable with
-# SPARK_GRAFT_AB=0 or --no-ab; override the ref with --ab <git-ref>.
-AB_BASELINE_REF = "e71e497"  # round-13 final code commit
 
 HEADLINE = [
     "tpch_q1_pricing",
@@ -151,59 +142,9 @@ def _env_stats(start_loadavg, start_snap, start_wall) -> dict:
     }
 
 
-def _run_ab_baseline(ref: str, sf_dir: str, cpus: str) -> dict:
-    """Bench a prior checkout in a temporary git worktree, same host, same
-    env, immediately after the HEAD measurements — the r6 host-drift
-    analysis (an unchanged r4 checkout re-benching +54%) as a standing
-    feature.  The child runs with SPARK_GRAFT_AB=0 so it never recurses."""
-    repo = os.path.dirname(os.path.abspath(__file__))
-    wt = tempfile.mkdtemp(prefix="bench_ab_")
-    try:
-        subprocess.run(
-            ["git", "-C", repo, "worktree", "add", "--detach", wt, ref],
-            check=True, capture_output=True, text=True,
-        )
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_SF_DIR=sf_dir,
-            SPARK_GRAFT_CPUS=cpus,
-            SPARK_GRAFT_AB="0",
-        )
-        proc = subprocess.run(
-            [sys.executable, os.path.join(wt, "bench.py")],
-            capture_output=True, text=True, env=env, cwd=wt, timeout=3600,
-        )
-        lines = [
-            l for l in proc.stdout.splitlines()
-            if l.startswith("{") and l.endswith("}")
-        ]
-        if proc.returncode != 0 or not lines:
-            return {"ref": ref, "error": (proc.stderr or proc.stdout)[-300:]}
-        payload = json.loads(lines[-1])
-        return {
-            "ref": ref,
-            "ref_value": payload["value"],
-            "ref_queries": payload.get("queries", {}),
-        }
-    finally:
-        subprocess.run(
-            ["git", "-C", repo, "worktree", "remove", "--force", wt],
-            capture_output=True,
-        )
-        shutil.rmtree(wt, ignore_errors=True)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    ab_ref: str | None = AB_BASELINE_REF
-    if os.environ.get("SPARK_GRAFT_AB", "1") == "0" or "--no-ab" in sys.argv:
-        ab_ref = None
-    if "--ab" in sys.argv:
-        i = sys.argv.index("--ab")
-        if i + 1 >= len(sys.argv):
-            sys.exit("usage: bench.py [--ab <git-ref>] [--no-ab]")
-        ab_ref = sys.argv[i + 1]
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     start_loadavg = os.getloadavg()
     start_snap = _host_cpu_snapshot()
@@ -267,15 +208,11 @@ def main() -> None:
     timings["etl_pipeline_1m"] = min(etl_runs[1:])
 
     total = round(sum(timings.values()), 3)
-    # r14 (VERDICT r13 item 2): the printed stdout line must stay SMALL —
-    # r12's stored bench tail was truncated before the line start because
-    # the ~1.5 KB methodology string and run arrays pushed the JSON past
-    # the capture bound, so the driver could not parse any prev-round
-    # number (PERF_r13 n_common=0).  The stdout line now carries only the
-    # contract keys (metric/value/unit/queries/sf + ab_ratio); everything
-    # else — methodology prose, env block, etl run arrays, A/B detail —
-    # ships as a second JSON line on STDERR ("BENCH_DETAIL ...").  Query
-    # keys are unchanged (may be added, never removed).
+    # The stdout line must stay small (under 1 KB) so bounded log capture
+    # keeps it whole: it carries only the contract keys
+    # (metric/value/unit/queries/sf).  Methodology prose, the env block and
+    # the etl run arrays ship as a second JSON line on STDERR
+    # ("BENCH_DETAIL ...").  Query keys may be added, never removed.
     payload = {
         "metric": "headline_query_set_wall_seconds",
         "value": total,
@@ -293,64 +230,11 @@ def main() -> None:
             "number; the r8 run array falsified the median-of-3-5 "
             "steady-state assumption -- the host throttles mid-array), "
             "cold first run and the old median reported separately in "
-            "etl_pipeline_1m_cold/_median35/_runs; ab_ratio: HEAD / baseline-ref "
-            "wall over the query keys both checkouts share, A/B/A on "
-            "this host (cross-round absolute numbers are not comparable "
-            "— the host itself drifts): head leg 1 in-process, then a "
-            "settle, the REF leg in a subprocess, another settle, and a "
-            "SECOND head leg; ab_ratio is the time-ADJACENT pair "
-            "head2/ref (the r8 idle-host experiment showed a leg "
-            "launched right after sustained load runs 3x+ slower with "
-            "no cgroup quota — VM-level — so the old two-leg design was "
-            "systematically unfair to whichever leg ran second); "
-            "ab.head_drift = head2/head1 exposes the drift magnitude — "
-            "treat ratios <= 1.15 as parity and distrust any run whose "
-            "head_drift is far from 1; a ratio WELL BELOW 1 with clean "
-            "head_drift usually means the middle (ref) leg was "
-            "throttled — read it as parity, never as a claimed speedup"
+            "etl_pipeline_1m_cold/_median35/_runs"
         ),
         "env": _env_stats(start_loadavg, start_snap, start_wall),
     }
     spark.stop()
-    if ab_ref is not None:
-        # A/B/A: the r8 idle-host experiment showed the host slows 3×+
-        # for a leg launched right after sustained load (no cgroup quota
-        # or throttle counters — VM-level) and recovers within minutes,
-        # which made every two-leg ab_ratio garbage in r6-r8.  Bracket
-        # the ref leg with a SECOND head leg: under monotone host drift
-        # the time-ADJACENT pair (ref, head2) is the fair comparison,
-        # and head2/head1 exposes the drift magnitude explicitly.
-        settle = float(os.environ.get("SPARK_GRAFT_AB_SETTLE", "120"))
-        try:
-            time.sleep(settle)  # settle after the in-process measurement
-            ab = _run_ab_baseline(ab_ref, sf_dir, cpus)
-        except Exception as e:  # noqa: BLE001 — A/B must never kill the bench line
-            ab = {"ref": ab_ref, "error": f"{type(e).__name__}: {e}"[:300]}
-        # separate try: a head2 failure must not clobber a good ref leg
-        # (ratio_pre still publishes as ab_ratio via the head2_sum==0 path)
-        try:
-            time.sleep(settle)
-            head2 = _run_ab_baseline("HEAD", sf_dir, cpus)
-        except Exception as e:  # noqa: BLE001
-            head2 = {"error": f"{type(e).__name__}: {e}"[:300]}
-        if "ref_queries" in ab:
-            common = sorted(set(timings) & set(ab["ref_queries"]))
-            head_sum = sum(timings[k] for k in common)
-            ref_sum = sum(ab["ref_queries"][k] for k in common)
-            h2q = head2.get("ref_queries") or {}
-            head2_sum = sum(h2q.get(k, 0.0) for k in common)
-            if ref_sum > 0:
-                ab["common_queries"] = len(common)
-                ab["ratio_pre"] = round(head_sum / ref_sum, 3)
-                if head2_sum > 0:
-                    ab["ratio_post"] = round(head2_sum / ref_sum, 3)
-                    ab["head_drift"] = round(head2_sum / head_sum, 3)
-                    # headline ratio = the adjacent-leg comparison
-                    payload["ab_ratio"] = ab["ratio_post"]
-                else:
-                    payload["ab_ratio"] = ab["ratio_pre"]
-            del ab["ref_queries"]
-        detail["ab"] = ab
     # leading \n: Spark's stderr progress bar ends with a bare \r, which
     # would otherwise glue this onto its line and break startswith filters
     print("\nBENCH_DETAIL " + json.dumps(detail), file=sys.stderr)

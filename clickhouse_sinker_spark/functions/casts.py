@@ -44,7 +44,6 @@ __all__ = [
     "parse_datetime_any",
     "epoch_to_timestamp",
     "valid_ip_or_default",
-    "parse_datetime_adaptive",
     "detect_datetime_layout",
     "parse_datetime_bound",
     "DATETIME_LAYOUTS",
@@ -390,81 +389,3 @@ def parse_datetime_bound(col: Column | str, fmt: str) -> Column:
         F.try_to_timestamp(c, F.lit(fmt)),
         F.try_to_timestamp(_prenormalize(c), F.lit(fmt)),
     )
-
-
-def parse_datetime_adaptive(col: Column | str, layouts: list[str] | None = None) -> Column:
-    """Strict reference-mode P9: commit to the FIRST layout that matches a
-    field and use only it from then on (parser/parser.go:160-189 caches the
-    layout per field forever).
-
-    On heterogeneous fields this differs from ``parse_datetime_any`` (which
-    retries all layouts per value): once a batch has seen a layout, later
-    values in other layouts return NULL — exactly the reference's behavior.
-
-    Implementation: Arrow-batched pandas UDF with closure state (the one
-    place the semantics genuinely need per-field mutable state).  The cache
-    is per-executor-python-worker; workers converge after one batch each.
-    Use ``parse_datetime_any`` unless reference-exact heterogeneous
-    behavior is required — the coalesce chain stays JVM-side and faster.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    fmts = list(layouts or DATETIME_LAYOUTS)
-    # Java layout → Python strptime equivalents for the fixed list above
-    py_fmts = {
-        "yyyy-MM-dd'T'HH:mm:ss[.SSSSSSSSS]XXX": "%Y-%m-%dT%H:%M:%S%z",
-        "yyyy-MM-dd'T'HH:mm:ss[.SSSSSSSSS]X": "%Y-%m-%dT%H:%M:%S%z",
-        "yyyy-MM-dd'T'HH:mm:ss[.SSSSSSSSS]": "%Y-%m-%dT%H:%M:%S",
-        "yyyy-MM-dd HH:mm:ss[.SSSSSSSSS]XXX": "%Y-%m-%d %H:%M:%S%z",
-        "yyyy-MM-dd HH:mm:ss[.SSSSSSSSS]": "%Y-%m-%d %H:%M:%S",
-        "yyyy-MM-dd": "%Y-%m-%d",
-        "dd/MM/yyyy": "%d/%m/%Y",
-        "dd MMM yy HH:mm XXX": "%d %b %y %H:%M %z",
-        "MM/dd/yyyy HH:mm:ss": "%m/%d/%Y %H:%M:%S",
-        "yyyyMMdd HH:mm:ss": "%Y%m%d %H:%M:%S",
-        # day-name family — parsed after the same pre-normalization the
-        # JVM path applies (strip day name / collapse spaces / zone→offset).
-        # UnixDate's named zones (MST…) have no strptime equivalent: JVM
-        # path only.
-        "dd MMM yyyy HH:mm:ss XXX": "%d %b %Y %H:%M:%S %z",
-        "dd MMM yyyy HH:mm:ss X": "%d %b %Y %H:%M:%S %z",
-        "MMM d HH:mm:ss yyyy": "%b %d %H:%M:%S %Y",
-        "dd-MMM-yy HH:mm:ss XXX": "%d-%b-%y %H:%M:%S %z",
-    }
-    ordered = []
-    for f in fmts:
-        pf = py_fmts.get(f)
-        if pf is not None and pf not in ordered:
-            ordered.append(pf)
-
-    _cache: dict[str, str] = {}
-
-    def _py_prenorm(s):
-        s = s.str.replace(r"^(Mon|Tue|Wed|Thu|Fri|Sat|Sun)[a-z]*,?\s+", "", regex=True)
-        s = s.str.replace(r"\s+", " ", regex=True)
-        return s.str.replace(r"\b(GMT|UTC|UT)\b", "+0000", regex=True)
-
-    def _parse_fn(s):
-        s = _py_prenorm(s)
-        state = _cache
-        committed = state.get("fmt")
-        if committed is None:
-            for fmt in ordered:
-                probe = s.dropna()
-                if probe.empty:
-                    break
-                try:
-                    pd.to_datetime(probe.iloc[0], format=fmt)
-                    committed = fmt
-                    state["fmt"] = fmt
-                    break
-                except (ValueError, TypeError):
-                    continue
-        if committed is None:
-            return pd.to_datetime(pd.Series([None] * len(s)))
-        return pd.to_datetime(s, format=committed, errors="coerce", utc=True).dt.tz_localize(None)
-
-    _parse = pandas_udf(_parse_fn, "timestamp")
-    c = F.col(col) if isinstance(col, str) else col
-    return _parse(c)

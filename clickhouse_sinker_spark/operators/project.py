@@ -132,8 +132,9 @@ def _resolve_src_type(
     return t
 
 # Kafka metadata pseudo-columns (task/task.go:285-298): dest column name →
-# Kafka-source column expression.  Spark's Kafka source exposes exactly the
-# fields the reference's InputMessage carries (model/message.go:10-17).
+# Kafka-source column.  Spark's Kafka source exposes exactly the fields the
+# reference's InputMessage carries (model/message.go:10-17).  parse_stream
+# emits them under the dest names, so they never clash with message keys.
 KAFKA_META_COLUMNS = {
     "__kafka_topic": "topic",
     "__kafka_partition": "partition",
@@ -310,8 +311,8 @@ def build_projection(
         if s.constant is not None:  # P5 constant-field injection
             cols.append(F.lit(s.constant).alias(s.name))
             continue
-        if s.name in KAFKA_META_COLUMNS:  # P6
-            cols.append(F.col(KAFKA_META_COLUMNS[s.name]).alias(s.name))
+        if s.name in KAFKA_META_COLUMNS:  # P6: parse_stream emits it by name
+            cols.append(F.col(s.name))
             continue
         src_name = s.source or s.name
         src = source_col(src_name, parser)

@@ -776,7 +776,7 @@ def etl_parse_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     P5 constants → P6 kafka meta → Float32 clamp).  Uses the ColumnSpec
     machinery end-to-end; all map-side codegen, zero shuffles."""
     e = _t(spark, sf_dir, "events").withColumns(
-        {"k_raw": F.get_json_object("props", "$.k"), "offset": F.col("event_id")}
+        {"k_raw": F.get_json_object("props", "$.k"), "__kafka_offset": F.col("event_id")}
     )
     specs = [
         ColumnSpec("time", "DateTime", source="ts"),

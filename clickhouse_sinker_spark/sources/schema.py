@@ -159,11 +159,13 @@ def json_parse_schema(specs: list[ColumnSpec], parser: str = "fastjson"):
     fastjson source names are single literal keys, dots included."""
     from pyspark.sql import types as T
 
-    from ..operators.project import gjson_segments
+    from ..operators.project import KAFKA_META_COLUMNS, gjson_segments
     from ..typemap import to_spark_type
 
     fields: dict[str, T.DataType] = {}
     for s in specs:
+        if s.name in KAFKA_META_COLUMNS:  # Kafka metadata, not a message key
+            continue
         t = s.parsed
         if t.name in ("DateTime", "DateTime64", "Date"):
             dt: T.DataType = T.StringType()

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import KafkaConfig, TaskConfig
-from ..operators.project import ColumnSpec, apply_projection
+from ..operators.project import KAFKA_META_COLUMNS, ColumnSpec, apply_projection
 from ..operators.sharding import ShardingPolicy, add_shard_column
 
 __all__ = ["kafka_source", "file_source", "parse_stream", "build_pipeline", "route_by_table"]
@@ -84,7 +84,6 @@ def parse_stream(
     csv_format: list[str] | None = None,
     delimiter: str = ",",
     fields: dict | None = None,
-    drop_parse_errors: bool = True,
 ) -> DataFrame:
     """Parse the ``value`` column (P1 fastjson / P2 gjson / P3 csv).
 
@@ -109,16 +108,18 @@ def parse_stream(
         # (task/task.go:178-186) — probe validity with a map parse, which
         # is null exactly for invalid/non-object payloads.
         valid = F.from_json(s, "map<string,string>").isNotNull()
-    out = raw.withColumn("__parsed", parsed)
-    if drop_parse_errors:
-        out = out.filter(valid & (F.trim(s) != ""))
-    out = out.select("topic", "partition", "offset", "key", "timestamp", "__parsed.*")
+    out = raw.withColumn("__parsed", parsed).filter(valid & (F.trim(s) != ""))
+    # metadata under its __kafka_* dim names, so message keys named topic,
+    # partition, offset, key or timestamp map through ordinary dims
+    out = out.select(
+        *[F.col(src).alias(meta) for meta, src in KAFKA_META_COLUMNS.items()], "__parsed.*"
+    )
     for k, v in (fields or {}).items():  # constants override message keys (P5)
         out = out.withColumn(k, F.lit(v))
     return out
 
 
-def route_by_table(raw: DataFrame, table_header: str = "__table_name") -> DataFrame:
+def route_by_table(raw: DataFrame) -> DataFrame:
     """Message→task routing key (R6): Kafka header ``__table_name`` if
     present, else the topic (task/consumer.go:233-255).  Requires the source
     to be read with includeHeaders=true; falls back to topic if absent."""
@@ -126,7 +127,7 @@ def route_by_table(raw: DataFrame, table_header: str = "__table_name") -> DataFr
         # get() is null-safe on the empty array (no header present) where
         # [0] would raise under ANSI mode
         hdr = F.expr(
-            f"get(filter(headers, h -> h.key = '{table_header}'), 0).value"
+            "get(filter(headers, h -> h.key = '__table_name'), 0).value"
         ).cast("string")
         return raw.withColumn("__route", F.coalesce(hdr, F.col("topic")))
     return raw.withColumn("__route", F.col("topic"))

@@ -78,9 +78,20 @@ __all__ = [
 ]
 
 
-def with_retry(fn, retry_times: int, base_sleep: float = 1.0, max_sleep: float = 60.0):
+# Parquet codec of both parquet sinks, whatever
+# spark.sql.parquet.compression.codec says.  Measured on the 1M-row ETL
+# bench write: zstd 2.23 s / 18 MB vs snappy (Spark default) 3.25 s /
+# 22 MB vs lz4 2.52 s / 21 MB: zstd is both the fastest wall and the
+# smallest output here, and its decode side is also cheap for downstream
+# readers.  Row-group / maxRecordsPerFile tuning measured as no-ops at
+# these per-task file sizes (well under one 128 MB row group).
+_PARQUET_CODEC = "zstd"
+
+
+def with_retry(fn, retry_times: int, base_sleep: float = 1.0):
     """Retry loop ≙ loopWrite (output/clickhouse.go:264-295): ``retry_times``
-    attempts (∞ if <= 0), backoff doubling 1s→60s, re-raise on exhaustion."""
+    attempts (∞ if <= 0), backoff doubling from ``base_sleep`` up to 60 s,
+    re-raise on exhaustion."""
     attempt = 0
     while True:
         try:
@@ -89,7 +100,7 @@ def with_retry(fn, retry_times: int, base_sleep: float = 1.0, max_sleep: float =
             attempt += 1
             if retry_times > 0 and attempt >= retry_times:
                 raise
-            time.sleep(min(base_sleep * (2 ** (attempt - 1)), max_sleep))
+            time.sleep(min(base_sleep * (2 ** (attempt - 1)), 60.0))
 
 
 @dataclass
@@ -99,14 +110,6 @@ class ParquetSink:
     path: str
     shards: int = 0
     shard_col: str = "__shard"
-    merge_schema: bool = True  # schema evolution lands via parquet mergeSchema
-    # r14 (guide §6): codec measured on the 1M-row ETL bench write —
-    # zstd 2.23 s / 18 MB vs snappy (Spark default) 3.25 s / 22 MB vs
-    # lz4 2.52 s / 21 MB: zstd is both the fastest wall and the smallest
-    # output here, and its decode side is also cheap for downstream
-    # readers.  Row-group / maxRecordsPerFile tuning measured as no-ops
-    # at these per-task file sizes (well under one 128 MB row group).
-    compression: str = "zstd"
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         out = batch
@@ -119,9 +122,10 @@ class ParquetSink:
             # doesn't collapse parallelism to the shard count at 100 TB.
             out = out.sortWithinPartitions(self.shard_col)
             writer = out.write.mode("append").partitionBy(self.shard_col)
-        if self.merge_schema:
-            writer = writer.option("mergeSchema", "true")
-        writer.option("compression", self.compression).parquet(self.path)
+        # schema evolution lands via parquet mergeSchema
+        writer.option("mergeSchema", "true").option("compression", _PARQUET_CODEC).parquet(
+            self.path
+        )
 
 
 @dataclass
@@ -153,7 +157,6 @@ class ManifestParquetSink:
 
     path: str
     shard_col: str = "__shard"
-    compression: str = "zstd"  # same measured choice as ParquetSink (r14 §6)
 
     def _manifest_dir(self) -> str:
         return f"{self.path}/_manifests"
@@ -182,7 +185,7 @@ class ManifestParquetSink:
         if self.shard_col in out.columns:
             out = out.sortWithinPartitions(self.shard_col)
             writer = out.write.mode("overwrite").partitionBy(self.shard_col)
-        writer.option("compression", self.compression).parquet(epoch_dir)
+        writer.option("compression", _PARQUET_CODEC).parquet(epoch_dir)
         payload = json.dumps(
             {"epoch": epoch_id, "dir": epoch_dir, "schema": batch.schema.json()}
         ).encode()

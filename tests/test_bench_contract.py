@@ -19,7 +19,6 @@ def test_bench_emits_one_json_line_and_contract():
     env = dict(os.environ)
     env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
     env["SPARK_GRAFT_CPUS"] = "4"
-    env["SPARK_GRAFT_AB"] = "0"  # the A/B leg has its own test below
     proc = subprocess.run(
         [sys.executable, str(REPO / "bench.py")],
         capture_output=True,
@@ -65,50 +64,6 @@ def test_bench_emits_one_json_line_and_contract():
     assert payload["queries"]["etl_pipeline_1m"] == min(runs[1:])
     assert detail["etl_pipeline_1m_median35"] == sorted(runs[2:])[1]
     assert "MIN of warm runs" in detail["methodology"]
-    assert "ab" not in detail and "ab_ratio" not in payload  # disabled via env
+    # cross-checkout comparison lives in perfbench, not here
+    assert "ab" not in detail and "ab_ratio" not in proc.stdout + detail_lines[0]
 
-
-def test_bench_ab_leg_emits_ratio():
-    """--ab <ref>: the baseline checkout benches in a worktree on the same
-    host and the JSON carries ab_ratio over the shared query keys — the
-    standing cross-round drift control (VERDICT r6 item 7).  HEAD is used
-    as its own baseline ref here so the test stays hermetic."""
-    env = dict(os.environ)
-    env["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.001"
-    env["SPARK_GRAFT_CPUS"] = "4"
-    env["SPARK_GRAFT_AB_SETTLE"] = "0"  # hermetic: skip the host-settle naps
-    head = subprocess.run(
-        ["git", "-C", str(REPO), "rev-parse", "HEAD"],
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    proc = subprocess.run(
-        [sys.executable, str(REPO / "bench.py"), "--ab", head],
-        capture_output=True,
-        text=True,
-        env=env,
-        cwd=str(REPO),
-        timeout=1080,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    json_lines = [
-        l for l in proc.stdout.splitlines() if l.startswith("{") and l.endswith("}")
-    ]
-    assert len(json_lines) == 1, proc.stdout[-2000:]
-    payload = json.loads(json_lines[0])
-    assert len(json_lines[0]) < 1024, len(json_lines[0])
-    detail_lines = [
-        l for l in proc.stderr.splitlines() if l.startswith("BENCH_DETAIL ")
-    ]
-    assert len(detail_lines) == 1, proc.stderr[-2000:]
-    detail = json.loads(detail_lines[0][len("BENCH_DETAIL "):])
-    assert detail["ab"]["ref"] == head
-    assert "error" not in detail["ab"], detail["ab"]
-    assert detail["ab"]["ref_value"] > 0
-    assert detail["ab"]["common_queries"] >= 4
-    assert payload["ab_ratio"] > 0
-    # A/B/A (r8): both bracket ratios and the drift magnitude are carried
-    assert detail["ab"]["ratio_pre"] > 0
-    assert detail["ab"]["ratio_post"] > 0
-    assert detail["ab"]["head_drift"] > 0
-    assert payload["ab_ratio"] == detail["ab"]["ratio_post"]
-    assert "ab_ratio" in detail["methodology"]

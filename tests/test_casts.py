@@ -207,20 +207,25 @@ def test_projection_matrix(spark):
     assert r0.const == "c" and r1.const == "c"
 
 
-def test_parse_datetime_adaptive_commits_first_layout(spark):
+def test_detect_then_bind_commits_first_layout(spark):
     """Strict P9 mode: the first matching layout is committed per field;
     later values in other layouts return NULL (parser/parser.go:160-189),
     unlike parse_datetime_any which retries all layouts per value."""
     from clickhouse_sinker_spark.functions.casts import (
-        parse_datetime_adaptive,
+        detect_datetime_layout,
         parse_datetime_any,
+        parse_datetime_bound,
     )
 
     df = spark.createDataFrame(
         [("2024-01-02 03:04:05",), ("07/06/2024",), ("2024-05-06 07:08:09",)],
         "s string",
     ).coalesce(1)
-    strict = [r[0] for r in df.select(parse_datetime_adaptive("s").alias("t")).collect()]
+    committed = detect_datetime_layout(df, "s")
+    assert committed == "yyyy-MM-dd HH:mm:ss[.SSSSSSSSS]"
+    strict = [
+        r[0] for r in df.select(parse_datetime_bound("s", committed).alias("t")).collect()
+    ]
     assert str(strict[0]) == "2024-01-02 03:04:05"
     assert strict[1] is None  # dd/MM/yyyy rejected after committing to the first layout
     assert str(strict[2]) == "2024-05-06 07:08:09"

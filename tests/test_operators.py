@@ -3,6 +3,7 @@ and similarity recall."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from clickhouse_sinker_spark.functions.hashing import shard_hash, simhash64
@@ -171,6 +172,31 @@ def test_minhash_band_join_shapes_identical(spark):
         assert struct.pack("<d", a.jaccard) == struct.pack("<d", b.jaccard)
 
 
+def test_minhash_lsh_malformed_conf_falls_back_to_default(spark):
+    """A malformed grouped-band-join threshold (``"2MB"``) must not raise
+    from minhash_lsh_pairs: it falls back to the default and returns the
+    default's pairs."""
+    from clickhouse_sinker_spark.operators.dedup import (
+        _LSH_GROUPED_BYTES_CONF,
+        minhash_lsh_pairs,
+    )
+
+    text = "the quick brown fox jumps over the lazy dog and runs away fast"
+    df = spark.createDataFrame(
+        [(1, text), (2, text + " extra"), (3, "pack my box with five dozen jugs")],
+        "doc_id long, text string",
+    )
+    kw = dict(n=3, num_perm=64, bands=16, threshold=0.2)
+    assert spark.conf.get(_LSH_GROUPED_BYTES_CONF, None) is None
+    default = sorted(minhash_lsh_pairs(df, "text", "doc_id", **kw).collect())
+    spark.conf.set(_LSH_GROUPED_BYTES_CONF, "2MB")
+    try:
+        got = sorted(minhash_lsh_pairs(df, "text", "doc_id", **kw).collect())
+    finally:
+        spark.conf.unset(_LSH_GROUPED_BYTES_CONF)
+    assert got == default and len(got) >= 1
+
+
 def test_shard_knuth_large_id_no_overflow(spark):
     """r11 ADVICE regression (+ r12 self-review extension): the Knuth
     split/shard hash must agree with exact integer math AND with the
@@ -332,6 +358,42 @@ def test_connected_components_star_matches_plain(spark):
     }
     assert star == plain
     assert star[42] == 2 and star[48] == 2 and star[46] == 45 and star[0] == 0
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+@pytest.mark.parametrize("kind", ["int", "string", "uuid"])
+def test_connected_components_any_id_type(spark, kind, ansi):
+    """Both CC algorithms honour the min-member contract for integer,
+    string and UUID ids under ANSI on and off: a shuffled 6-node chain
+    collapses onto its minimum, a pair onto its smaller end, and an
+    isolated node stays alone."""
+    import random
+    import uuid
+
+    from clickhouse_sinker_spark.operators.dedup import (
+        connected_components,
+        connected_components_star,
+    )
+
+    ids = {
+        "int": [i * 7 for i in range(9)],
+        "string": [f"d{i}" for i in range(9)],
+        "uuid": [str(uuid.UUID(int=(i + 1) << 100)) for i in range(9)],
+    }[kind]
+    dtype = "bigint" if kind == "int" else "string"
+    edges_rows = [(ids[i], ids[i + 1]) for i in range(5)] + [(ids[7], ids[6])]
+    random.Random(3).shuffle(edges_rows)
+    nodes = spark.createDataFrame([(i,) for i in ids], f"id {dtype}")
+    edges = spark.createDataFrame(edges_rows, f"id_a {dtype}, id_b {dtype}")
+    want = {i: ids[0] for i in ids[:6]} | {ids[6]: ids[6], ids[7]: ids[6], ids[8]: ids[8]}
+    old = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        for cc in (connected_components, connected_components_star):
+            got = {r["id"]: r["component"] for r in cc(edges, nodes).collect()}
+            assert got == want, cc.__name__
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", old)
 
 
 def test_connected_components_star_round_count(spark):

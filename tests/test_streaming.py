@@ -400,6 +400,44 @@ def test_config_to_pipeline_switchover(spark, workdir):
     assert float(row.value) == 7.5
 
 
+def test_message_keys_named_like_kafka_metadata(spark, workdir):
+    """Message keys named timestamp/offset/topic/partition/key map through
+    ordinary dims, while __kafka_* dims still read the source metadata."""
+    from clickhouse_sinker_spark.sources.schema import json_parse_schema, specs_from_task
+
+    rows = [
+        {"timestamp": f"2024-01-01 00:00:{i:02d}", "offset": 1000 + i, "topic": "msg_topic",
+         "partition": i % 3, "key": f"k{i}", "v": i}
+        for i in range(20)
+    ]
+    _write_jsonl(workdir / "in" / "a.jsonl", rows)
+    task = TaskConfig(
+        name="meta_keys",
+        dims=(
+            ("timestamp", "DateTime", None), ("offset", "Int64", None),
+            ("topic", "String", None), ("partition", "Int32", None),
+            ("key", "String", None), ("v", "Int64", None),
+            ("__kafka_offset", "Int64", None), ("__kafka_topic", "String", None),
+        ),
+    )
+    specs = specs_from_task(task)
+    raw = file_source(spark, str(workdir / "in"))
+    pipe = build_pipeline(raw, task, specs, json_parse_schema(specs))
+    pipe.run_available(ParquetSink(str(workdir / "out" / "t")), str(workdir / "ckpt" / "m"))
+
+    got = {r.v: r for r in spark.read.parquet(str(workdir / "out" / "t")).collect()}
+    assert sorted(got) == list(range(20))
+    for i, r in got.items():
+        assert str(r.timestamp) == f"2024-01-01 00:00:{i:02d}"
+        assert (r.offset, r.topic, r.partition, r.key) == (1000 + i, "msg_topic", i % 3, f"k{i}")
+        assert r["__kafka_topic"] == "file"  # file_source's metadata, not the message's
+    line_hashes = {
+        r[0]
+        for r in spark.read.text(str(workdir / "in")).select(F.xxhash64("value")).collect()
+    }
+    assert {r["__kafka_offset"] for r in got.values()} == line_hashes
+
+
 def test_stream_static_enrichment_join(spark, workdir):
     """Stream-static join (SURVEY §2.7): the parsed stream enriched with a
     static dimension table inside the same micro-batch plan — the Spark

@@ -1,36 +1,45 @@
-"""Round-13 optimization profiler (guide §1: measure first).
+"""Per-query optimization profiler (measure before changing a plan).
 
 For each headline query (or --only name,name):
   - time DataFrame construction (plan build, includes parquet footer reads)
-  - save .explain('formatted') to plans/r13/<name>_<tag>.txt
+  - save .explain('formatted') to <out_dir>/<name>_<tag>.txt
   - count Exchange / BroadcastExchange / *EvalPython nodes
   - time N runs of .count() (the bench methodology) and of the noop sink
-    (guide §1.4 — computes every column, isolates computation from action
-    pruning), cache cleared between runs.
+    (computes every column, isolates computation from action pruning),
+    cache cleared between runs
+  - write the per-query figures to <out_dir>/profile_<tag>.json.
 
-Usage: python -m tools.profile_r13 [--tag before|after] [--only a,b] [--runs 3]
+Relative paths resolve against the repo root.
+Usage: python tools/query_profile.py <out_dir> [--tag before|after] [--only a,b] [--runs 3]
 """
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
 import sys
 import time
 
-from pyspark.sql import SparkSession
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> int:
-    tag = "before"
-    if "--tag" in sys.argv:
-        tag = sys.argv[sys.argv.index("--tag") + 1]
-    runs = int(sys.argv[sys.argv.index("--runs") + 1]) if "--runs" in sys.argv else 3
+    ap = argparse.ArgumentParser(description="per-query build/count/noop profile")
+    ap.add_argument("out_dir", help="plan and profile output directory")
+    ap.add_argument("--tag", default="before")
+    ap.add_argument("--only", help="comma-separated query names (default: bench.HEADLINE)")
+    ap.add_argument("--runs", type=int, default=3)
+    args = ap.parse_args()
+    out_dir = os.path.join(REPO, args.out_dir)
+    from pyspark.sql import SparkSession
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
-        .appName("r13-profile")
+        .appName("clickhouse_sinker_spark-profile")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
@@ -40,15 +49,12 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    sys.path.insert(0, "/root/repo")
     import bench
     from clickhouse_sinker_spark.plans.queries import QUERIES
 
-    names = list(bench.HEADLINE)
-    if "--only" in sys.argv:
-        names = sys.argv[sys.argv.index("--only") + 1].split(",")
+    names = args.only.split(",") if args.only else list(bench.HEADLINE)
 
-    os.makedirs("/root/repo/plans/r13", exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     # warm-up at sf0.001 (same as bench.py)
     warm = "/root/testdata/sf0.001"
     for n in names:
@@ -61,7 +67,7 @@ def main() -> int:
         df = QUERIES[n](spark, sf_dir)
         t_build = time.monotonic() - t0
         plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-        with open(f"/root/repo/plans/r13/{n}_{tag}.txt", "w") as f:
+        with open(os.path.join(out_dir, f"{n}_{args.tag}.txt"), "w") as f:
             f.write(plan)
         nodes = {
             "Exchange": len(re.findall(r"\bExchange\b", plan)),
@@ -74,12 +80,12 @@ def main() -> int:
             "CartesianProduct": len(re.findall(r"CartesianProduct", plan)),
         }
         counts, noops = [], []
-        for _ in range(runs):
+        for _ in range(args.runs):
             spark.catalog.clearCache()
             t0 = time.monotonic()
             QUERIES[n](spark, sf_dir).count()
             counts.append(round(time.monotonic() - t0, 3))
-        for _ in range(runs):
+        for _ in range(args.runs):
             spark.catalog.clearCache()
             df2 = QUERIES[n](spark, sf_dir)
             t0 = time.monotonic()
@@ -94,7 +100,7 @@ def main() -> int:
             "nodes": nodes,
         }
         print(json.dumps({n: out[n]}), flush=True)
-    with open(f"/root/repo/plans/r13/profile_{tag}.json", "w") as f:
+    with open(os.path.join(out_dir, f"profile_{args.tag}.json"), "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
     print("TOTAL count_min:", round(sum(v["count_min"] for v in out.values()), 3))
     print("TOTAL noop_min:", round(sum(v["noop_min"] for v in out.values()), 3))
