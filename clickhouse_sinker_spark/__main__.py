@@ -17,8 +17,7 @@ import argparse
 from pyspark.sql import SparkSession
 
 from .config_io import load_config
-from .sources.schema import json_parse_schema, specs_from_task
-from .streaming.pipeline import build_pipeline, file_source, kafka_source
+from .streaming.pipeline import file_source, kafka_source
 from .streaming.sink import JdbcSink, ParquetSink
 
 
@@ -422,17 +421,6 @@ def main(argv: list[str] | None = None) -> None:
                 )
                 pusher.start()
 
-        if args.once:
-            for task in cfg.tasks:
-                specs = specs_from_task(task)
-                schema = json_parse_schema(specs, parser=task.parser)
-                pipe = build_pipeline(
-                    source_factory(spark, task, cfg), task, specs, schema,
-                    shards=cfg.clickhouse.shards,
-                )
-                pipe.run_available(sink_factory(task, cfg), f"{args.checkpoint}/{task.name}")
-            return
-
         from .control import SinkerApp
 
         app = SinkerApp(
@@ -441,6 +429,11 @@ def main(argv: list[str] | None = None) -> None:
             source_factory=source_factory,
             sink_factory=sink_factory,
         )
+        if args.once:
+            for task in cfg.tasks:
+                pipe, sink, checkpoint = app.build_task(task, cfg)
+                pipe.run_available(sink, checkpoint)
+            return
         app.apply_config(cfg)
         if health is not None or pusher is not None:
             state_fn.queries = app.queries  # live view for /state and /ready

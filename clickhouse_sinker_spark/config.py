@@ -81,9 +81,6 @@ class ClickHouseConfig:
             if h.strip()
         ]
 
-    def jdbc_url(self, shard: int = 0) -> str:
-        return self.replica_urls(shard)[0]
-
 
 @dataclass
 class TaskConfig:
@@ -132,10 +129,4 @@ def normalize_tasks(tasks: list[TaskConfig]) -> list[TaskConfig]:
         t.buffer_size = size
         if t.time_unit <= 0:
             t.time_unit = 1.0
-    groups: dict[str, str] = {}
-    for t in tasks:
-        # consumer-group consistency check (config/config.go:366-401)
-        if t.consumer_group in groups and groups[t.consumer_group] != (t.earliest,):
-            pass
-        groups[t.consumer_group] = (t.earliest,)
     return tasks

@@ -23,7 +23,6 @@ at-least-once contract.
 from __future__ import annotations
 
 import threading
-import time
 from dataclasses import dataclass, field as dc_field
 from typing import Callable
 
@@ -31,7 +30,7 @@ from pyspark.sql import SparkSession
 
 from .config_io import SinkerConfig, load_config
 from .sources.schema import json_parse_schema, specs_from_task
-from .streaming.pipeline import build_pipeline
+from .streaming.pipeline import Pipeline, build_pipeline
 
 __all__ = ["SinkerApp", "diff_tasks"]
 
@@ -76,6 +75,9 @@ class SinkerApp:
     ``source_factory(spark, task, cfg)`` and ``sink_factory(task, cfg)``
     supply the transport (Kafka+JDBC in deployment; file+parquet or
     file+Derby in tests) — the control flow is identical either way.
+    Which tasks run here is decided before ``apply_config``: with several
+    instances, the CLI's registry mode passes only this instance's
+    published share (registry.py).
     """
 
     spark: SparkSession
@@ -84,65 +86,31 @@ class SinkerApp:
     sink_factory: Callable
     cfg: SinkerConfig | None = None
     queries: dict = dc_field(default_factory=dict)  # task name -> StreamingQuery
-    # multi-instance mode (R7): when `instance`+`instances` are set, this
-    # app runs only the tasks the deterministic assignment plan gives it —
-    # every instance computes the same plan from the same config, so no
-    # coordinator is needed (vs the reference's Nacos publish round-trip,
-    # config_manager/nacos.go:445-466)
-    instance: str | None = None
-    instances: tuple[str, ...] = ()
-    rebalance_by_lags: bool = False
-    # shared lag snapshot provider for lag mode.  CONSISTENCY CONTRACT:
-    # all instances must see the same snapshot for their plans to agree
-    # (the reference solves this by having one scheduler publish the plan;
-    # here the lag source is the shared thing instead — e.g. a metrics
-    # store fed by every instance's query progress).  Default (None) falls
-    # back to this app's own queries' progress, which is only safe
-    # single-instance or in tests.
-    lag_source: Callable | None = None
 
-    def _start_task(self, task, cfg: SinkerConfig) -> None:
+    def build_task(self, task, cfg: SinkerConfig) -> tuple[Pipeline, Callable, str]:
+        """Task → (pipeline, sink, checkpoint dir): the one place a
+        configured task becomes a query plan.  The caller picks the
+        trigger: ``Pipeline.start`` for a long-running task,
+        ``Pipeline.run_available`` to drain and exit."""
         specs = specs_from_task(task)
         schema = json_parse_schema(specs, parser=task.parser)
         raw = self.source_factory(self.spark, task, cfg)
         pipe = build_pipeline(raw, task, specs, schema, shards=cfg.clickhouse.shards)
-        sink = self.sink_factory(task, cfg)
-        self.queries[task.name] = pipe.start(
-            sink, f"{self.checkpoint_root}/{task.name}", query_name=task.name
-        )
+        return pipe, self.sink_factory(task, cfg), f"{self.checkpoint_root}/{task.name}"
+
+    def _start_task(self, task, cfg: SinkerConfig) -> None:
+        pipe, sink, checkpoint = self.build_task(task, cfg)
+        self.queries[task.name] = pipe.start(sink, checkpoint)
 
     def _stop_task(self, name: str) -> None:
         q = self.queries.pop(name, None)
         if q is not None:
             q.stop()  # graceful: in-flight batch commits, then the query ends
 
-    def _my_share(self, new_cfg: SinkerConfig) -> SinkerConfig:
-        """Restrict the config to this instance's assigned tasks (R7).
-        Lags come from the running queries' own progress events when
-        rebalance_by_lags is on — no external lag service."""
-        if not (self.instance and len(self.instances) > 1):
-            return new_cfg
-        from dataclasses import replace
-
-        from .assignment import assign_tasks, task_lags_from_progress
-
-        lags = None
-        if self.rebalance_by_lags:
-            if self.lag_source is not None:
-                lags = dict(self.lag_source())
-            else:
-                lags = task_lags_from_progress(
-                    {n: (q.lastProgress or {}) for n, q in self.queries.items()}
-                )
-        plan = assign_tasks([t.name for t in new_cfg.tasks], self.instances, lags)
-        mine = set(plan.get(self.instance, []))
-        return replace(new_cfg, tasks=[t for t in new_cfg.tasks if t.name in mine])
-
     def apply_config(self, new_cfg: SinkerConfig | str | dict) -> dict[str, list[str]]:
         """Diff + restart-affected (C2).  Returns the applied diff."""
         if not isinstance(new_cfg, SinkerConfig):
             new_cfg = load_config(new_cfg)
-        new_cfg = self._my_share(new_cfg)
         diff = diff_tasks(self.cfg, new_cfg)
         if diff["full_restart"]:
             # transport changed: stop all, start all (task/sinker.go:396-443)

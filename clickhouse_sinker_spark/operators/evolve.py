@@ -5,8 +5,9 @@ The reference restarts the consumer when a message carries unknown keys,
 issues ``ALTER TABLE ADD COLUMN IF NOT EXISTS`` with an inferred type, and
 re-projects.  In Spark we detect new keys *inside the batch* (no restart):
 ``json_object_keys`` diff against the known column set, white/black regex
-filters, MaxDims guard, then the caller widens the destination (DDL via JDBC
-or parquet mergeSchema) and rebuilds the projection for the same batch.
+filters, MaxDims guard, then the caller widens the destination (DDL via JDBC;
+parquet needs none, its readers pass mergeSchema) and rebuilds the
+projection for the same batch.
 
 Type inference mirrors fjDetectType (parser/fastjson.go:623-658): Bool,
 Int64, Float64, DateTime (string that parses as datetime), String; arrays

@@ -17,7 +17,10 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import shard_hash, shard_stripe, sorting_key_shard
 
-__all__ = ["ShardingPolicy", "add_shard_column", "route_to_shards"]
+__all__ = ["SHARD_COL", "ShardingPolicy", "add_shard_column", "route_to_shards"]
+
+# the shard-id column the pipeline adds and every sink partitions by
+SHARD_COL = "__shard"
 
 
 @dataclass
@@ -31,7 +34,7 @@ class ShardingPolicy:
     sorting_keys: tuple[str, ...] = ()
 
 
-def add_shard_column(df: DataFrame, policy: ShardingPolicy, shards: int, col_name: str = "__shard") -> DataFrame:
+def add_shard_column(df: DataFrame, policy: ShardingPolicy, shards: int, col_name: str = SHARD_COL) -> DataFrame:
     """Attach the shard id column per policy.
 
     - hash:   xxhash64(key) % shards        (task/sharding.go:104-117)
@@ -57,4 +60,4 @@ def route_to_shards(df: DataFrame, policy: ShardingPolicy, shards: int) -> DataF
     sink then writes partitions in parallel — same parallelism model as the
     reference's per-shard worker pool (output/clickhouse.go:139-161)."""
     with_shard = add_shard_column(df, policy, shards)
-    return with_shard.repartition(shards, F.col("__shard"))
+    return with_shard.repartition(shards, F.col(SHARD_COL))

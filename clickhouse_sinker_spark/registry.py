@@ -31,8 +31,8 @@ Semantics re-expressed here (same WHAT, Python/stdlib HOW):
 
 Lag-aware mode: the reference pulls consumer-group lags from Kafka admin
 (``config_manager/lags.go``).  Here the lag snapshot is an injectable
-callable (in deployment: a metrics store fed by every query's progress —
-see ``control.SinkerApp.lag_source``), keeping this module transport-pure.
+callable (in deployment: a metrics store fed by every instance's query
+progress), keeping this module transport-pure.
 """
 
 from __future__ import annotations

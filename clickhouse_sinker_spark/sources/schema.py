@@ -11,14 +11,11 @@ self-references; it then builds the projection from that schema.  Here:
   ColumnSpecs, applying the exclude/materialized rules (D7).
 - ``specs_from_parquet`` is the lakehouse-native AutoSchema: read the
   destination parquet's StructType directly.
-
-JDBC is optional (no ClickHouse in the test container): ``jdbc_read`` is
-an import-gated helper the deployment uses; everything else is pure.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from ..operators.project import ColumnSpec
 from ..typemap import parse_ch_type
@@ -27,7 +24,6 @@ __all__ = [
     "system_columns_sql",
     "specs_from_columns",
     "specs_from_parquet",
-    "jdbc_read",
 ]
 
 
@@ -106,18 +102,6 @@ def specs_from_parquet(spark: SparkSession, path: str) -> list[ColumnSpec]:
             ch = f"Nullable({ch})"
         specs.append(ColumnSpec(f.name, ch, not_nullable=not f.nullable))
     return specs
-
-
-def jdbc_read(spark: SparkSession, url: str, query: str, **options: str) -> DataFrame:
-    """JDBC read wrapper (requires a ClickHouse JDBC driver on the
-    classpath in deployment; absent in the test container)."""
-    return (
-        spark.read.format("jdbc")
-        .option("url", url)
-        .option("query", query)
-        .options(**options)
-        .load()
-    )
 
 
 def specs_from_task(task) -> list[ColumnSpec]:

@@ -141,27 +141,30 @@ class Pipeline:
     specs: list[ColumnSpec]
     transformed: DataFrame
 
-    def start(self, sink_fn, checkpoint: str, query_name: str | None = None):
-        """Start the streaming query: foreachBatch(sink_fn) with the task's
-        flush interval as the processing-time trigger (W1) and checkpointed
-        offsets (S7 — commit happens after sink_fn returns, at-least-once)."""
+    def _writer(self, sink_fn, checkpoint: str):
+        """foreachBatch(sink_fn) with checkpointed offsets (S7 — commit
+        happens after sink_fn returns, at-least-once); ``start`` and
+        ``run_available`` add only their trigger and, for ``start``, the
+        query name."""
+        return self.transformed.writeStream.foreachBatch(sink_fn).option(
+            "checkpointLocation", checkpoint
+        )
+
+    def start(self, sink_fn, checkpoint: str):
+        """Start the streaming query, named after the task, with the task's
+        flush interval as the processing-time trigger (W1)."""
         return (
-            self.transformed.writeStream.foreachBatch(sink_fn)
-            .option("checkpointLocation", checkpoint)
+            self._writer(sink_fn, checkpoint)
             .trigger(processingTime=f"{self.task.flush_interval} seconds")
-            .queryName(query_name or self.task.name)
+            .queryName(self.task.name)
             .start()
         )
 
     def run_available(self, sink_fn, checkpoint: str):
-        """Drain everything currently available then stop (tests/backfill):
-        trigger(availableNow) — same sink path as production."""
-        q = (
-            self.transformed.writeStream.foreachBatch(sink_fn)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        """Drain everything currently available then stop (the CLI's
+        --once, backfill, tests): trigger(availableNow), same sink path as
+        production."""
+        q = self._writer(sink_fn, checkpoint).trigger(availableNow=True).start()
         q.awaitTermination()
         return q
 

@@ -6,7 +6,7 @@ own connection with retry/backoff; commit happens only after every shard's
 batch landed (WaitGroup barrier).  In Spark the same physics:
 
     foreachBatch(batch):
-        batch.repartition(shards, shard_col)      # R5 fan-out
+        batch.repartition(shards, __shard)        # R5 fan-out
              .write...                            # per-partition parallel
     <engine commits checkpoint after return>      # S7 barrier
 
@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import ClickHouseConfig
+from ..operators.sharding import SHARD_COL
 
 
 def _epochize(col, dt):
@@ -87,6 +88,9 @@ __all__ = [
 # these per-task file sizes (well under one 128 MB row group).
 _PARQUET_CODEC = "zstd"
 
+# concurrent shard writers of JdbcSink (the worker-pool width)
+_MAX_SHARD_WRITERS = 8
+
 
 def with_retry(fn, retry_times: int, base_sleep: float = 1.0):
     """Retry loop ≙ loopWrite (output/clickhouse.go:264-295): ``retry_times``
@@ -103,28 +107,34 @@ def with_retry(fn, retry_times: int, base_sleep: float = 1.0):
             time.sleep(min(base_sleep * (2 ** (attempt - 1)), 60.0))
 
 
+def _write_parquet(batch: DataFrame, path: str, mode: str, by_shard: bool) -> None:
+    """The parquet write of both parquet sinks.  With ``by_shard`` (R5):
+    cluster each task's rows by shard locally, then let the
+    dynamic-partition writer stream one shard directory at a time.
+    sortWithinPartitions (no shuffle, full write parallelism, one open file
+    per task) beats repartition(shards) ~4× in bench and doesn't collapse
+    parallelism to the shard count at 100 TB."""
+    writer = batch.write
+    if by_shard:
+        writer = batch.sortWithinPartitions(SHARD_COL).write.partitionBy(SHARD_COL)
+    writer.mode(mode).option("compression", _PARQUET_CODEC).parquet(path)
+
+
 @dataclass
 class ParquetSink:
-    """Shard-partitioned parquet landing (test stand-in / lakehouse path)."""
+    """Shard-partitioned parquet landing (test stand-in / lakehouse path).
+
+    Batches append, so a batch with new columns lands files with a wider
+    schema beside the older ones; readers of such evolved output must read
+    with ``spark.read.option("mergeSchema", "true")`` to see every column.
+    """
 
     path: str
     shards: int = 0
-    shard_col: str = "__shard"
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        out = batch
-        writer = out.write.mode("append")
-        if self.shards and self.shard_col in out.columns:
-            # R5: cluster each task's rows by shard locally, then let the
-            # dynamic-partition writer stream one shard directory at a time.
-            # sortWithinPartitions (no shuffle, full write parallelism, one
-            # open file per task) beats repartition(shards) ~4× in bench and
-            # doesn't collapse parallelism to the shard count at 100 TB.
-            out = out.sortWithinPartitions(self.shard_col)
-            writer = out.write.mode("append").partitionBy(self.shard_col)
-        # schema evolution lands via parquet mergeSchema
-        writer.option("mergeSchema", "true").option("compression", _PARQUET_CODEC).parquet(
-            self.path
+        _write_parquet(
+            batch, self.path, "append", bool(self.shards) and SHARD_COL in batch.columns
         )
 
 
@@ -156,7 +166,6 @@ class ManifestParquetSink:
     """
 
     path: str
-    shard_col: str = "__shard"
 
     def _manifest_dir(self) -> str:
         return f"{self.path}/_manifests"
@@ -180,12 +189,8 @@ class ManifestParquetSink:
         if fs.exists(mf):  # replayed epoch: already committed, no-op
             return
         epoch_dir = f"{self.path}/epoch={epoch_id}"
-        out = batch
-        writer = out.write.mode("overwrite")  # overwrite: partial retry debris
-        if self.shard_col in out.columns:
-            out = out.sortWithinPartitions(self.shard_col)
-            writer = out.write.mode("overwrite").partitionBy(self.shard_col)
-        writer.option("compression", _PARQUET_CODEC).parquet(epoch_dir)
+        # overwrite: partial retry debris
+        _write_parquet(batch, epoch_dir, "overwrite", SHARD_COL in batch.columns)
         payload = json.dumps(
             {"epoch": epoch_id, "dir": epoch_dir, "schema": batch.schema.json()}
         ).encode()
@@ -307,10 +312,8 @@ class JdbcSink:
     ch: ClickHouseConfig
     table: str
     shards: int = 1
-    shard_col: str = "__shard"
     batch_size: int = 1 << 16
     async_insert: bool = False  # S4: session settings passthrough
-    max_parallel: int = 8  # concurrent shard writers (worker-pool width)
     replicas: ShardReplicas = field(init=False)
 
     def __post_init__(self) -> None:
@@ -363,18 +366,18 @@ class JdbcSink:
         with_retry(attempt, self.ch.retry_times)
 
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
-        cols = [c for c in batch.columns if c != self.shard_col]
-        if self.shard_col in batch.columns and self.shards > 1:
+        cols = [c for c in batch.columns if c != SHARD_COL]
+        if SHARD_COL in batch.columns and self.shards > 1:
             # R5 fan-out: one shuffle clusters rows by shard; the persisted
             # batch is scanned once into cache, then each shard's filter
             # job reads only cached partitions.
-            routed = batch.repartition(self.shards, F.col(self.shard_col)).persist()
+            routed = batch.repartition(self.shards, F.col(SHARD_COL)).persist()
             try:
                 parts = [
-                    routed.filter(F.col(self.shard_col) % self.shards == s).select(*cols)
+                    routed.filter(F.col(SHARD_COL) % self.shards == s).select(*cols)
                     for s in range(self.shards)
                 ]
-                with ThreadPoolExecutor(max_workers=min(self.shards, self.max_parallel)) as ex:
+                with ThreadPoolExecutor(max_workers=min(self.shards, _MAX_SHARD_WRITERS)) as ex:
                     futures = [
                         ex.submit(self._write_shard, p, s) for s, p in enumerate(parts)
                     ]

@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..operators.series import dedup_series_latest
+
 __all__ = [
     "series_dedup_stream",
     "series_dedup_stream_tws",
@@ -46,9 +48,11 @@ __all__ = [
 _STATE_SCHEMA = StructType([StructField("mid", LongType())])
 
 
-def _dedup_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-    """Emit rows whose (sid, mid) is new or changed vs state (D1)."""
-    last_mid = state.get[0] if state.exists else None
+def _transitions(
+    pdfs: Iterator[pd.DataFrame], last_mid: int | None
+) -> tuple[list[pd.DataFrame], int | None]:
+    """One series' (sid, mid) transitions vs the stored ``last_mid`` (D1):
+    the rows to emit and the mid to store next."""
     out = []
     for pdf in pdfs:
         pdf = pdf.sort_values("__mgmt_id__")
@@ -58,6 +62,12 @@ def _dedup_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[
         if len(changed):
             last_mid = int(changed["__mgmt_id__"].iloc[-1])
             out.append(changed)
+    return out, last_mid
+
+
+def _dedup_fn(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+    """Emit rows whose (sid, mid) is new or changed vs state (D1)."""
+    out, last_mid = _transitions(pdfs, state.get[0] if state.exists else None)
     if last_mid is not None:
         state.update((last_mid,))
     if out:
@@ -112,17 +122,7 @@ def series_dedup_stream_tws(
 
         def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
             prior = self._mid.get()
-            last_mid = prior[0] if prior is not None else None
-            out = []
-            for pdf in rows:
-                pdf = pdf.sort_values("__mgmt_id__")
-                changed = (
-                    pdf[pdf["__mgmt_id__"] != last_mid] if last_mid is not None else pdf
-                )
-                changed = changed.drop_duplicates(subset=["__mgmt_id__"], keep="first")
-                if len(changed):
-                    last_mid = int(changed["__mgmt_id__"].iloc[-1])
-                    out.append(changed)
+            out, last_mid = _transitions(rows, prior[0] if prior is not None else None)
             if last_mid is not None:
                 self._mid.update((last_mid,))
             if out:
@@ -149,17 +149,7 @@ def series_dedup_batch_join(batch: DataFrame, existing: DataFrame) -> DataFrame:
     active-series set is small; shuffle-join on sid otherwise (co-located
     under R4 sharding).
     """
-    latest = (
-        batch.groupBy("__series_id__")
-        .agg(
-            F.max("__mgmt_id__").alias("__mgmt_id__"),
-            *[
-                F.max_by(c, "__mgmt_id__").alias(c)
-                for c in batch.columns
-                if c not in ("__series_id__", "__mgmt_id__")
-            ],
-        )
-    )
+    latest = dedup_series_latest(batch)
     ex = existing.select(
         F.col("__series_id__").alias("__ex_sid"), F.col("__mgmt_id__").alias("__ex_mid")
     )

@@ -1,6 +1,5 @@
-"""R7 task assignment: snake distribution, lag rebalance, progress-based
-lag extraction, and the SinkerApp multi-instance filter (pure-Python tests
-— no Spark needed except the app-level one)."""
+"""R7 task assignment: snake distribution, lag rebalance and progress-based
+lag extraction (pure-Python tests, no Spark)."""
 
 from __future__ import annotations
 
@@ -98,31 +97,3 @@ def test_task_lags_from_progress():
 def test_task_lags_never_negative():
     prog = {"t": {"sources": [{"latestOffset": 10, "endOffset": 25}]}}
     assert task_lags_from_progress(prog) == {"t": 0}
-
-
-def test_sinker_app_runs_only_its_share(spark, tmp_path):
-    """Two instances, four tasks: each app instance starts only the tasks
-    the deterministic plan assigns it, and together they cover all four."""
-    from clickhouse_sinker_spark.config_io import load_config
-
-    from .test_control import _cfg_dict, _mk_app, _task_dict
-
-    cfg = _cfg_dict([_task_dict(f"t{i}") for i in range(4)])
-    started = {}
-    apps = []
-    for inst in ("i0", "i1"):
-        (tmp_path / inst).mkdir(exist_ok=True)
-        app = _mk_app(spark, tmp_path / inst)
-        app.instance = inst
-        app.instances = ("i0", "i1")
-        apps.append(app)
-        app.apply_config(load_config(cfg))
-        started[inst] = sorted(app.queries)
-    try:
-        assert sorted(started["i0"] + started["i1"]) == ["t0", "t1", "t2", "t3"]
-        assert set(started["i0"]).isdisjoint(started["i1"])
-        # snake over 2 instances: i0 gets t0+t3, i1 gets t1+t2
-        assert started["i0"] == ["t0", "t3"] and started["i1"] == ["t1", "t2"]
-    finally:
-        for app in apps:
-            app.stop_all()

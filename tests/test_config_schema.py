@@ -63,9 +63,9 @@ def test_kafka_security_passthrough():
 
 def test_jdbc_url_rotates_hosts():
     ch = ClickHouseConfig(hosts=("h0:8123", "h1:8123"), database="d")
-    assert ch.jdbc_url(0).endswith("h0:8123/d")
-    assert ch.jdbc_url(1).endswith("h1:8123/d")
-    assert ch.jdbc_url(2).endswith("h0:8123/d")
+    assert ch.replica_urls(0)[0].endswith("h0:8123/d")
+    assert ch.replica_urls(1)[0].endswith("h1:8123/d")
+    assert ch.replica_urls(2)[0].endswith("h0:8123/d")
 
 
 def test_with_retry_succeeds_after_failures():
@@ -190,7 +190,8 @@ def test_jdbc_sink_options():
     ch = ClickHouseConfig(hosts=("h0:8123", "h1:8123"), database="db", username="u",
                           password="p", shards=2, retry_times=1)
     sink = JdbcSink(ch, table="t", shards=2, batch_size=4096, async_insert=True)
-    o0, o1 = sink.jdbc_options(ch.jdbc_url(0)), sink.jdbc_options(ch.jdbc_url(1))
+    o0 = sink.jdbc_options(ch.replica_urls(0)[0])
+    o1 = sink.jdbc_options(ch.replica_urls(1)[0])
     assert o0["url"].endswith("h0:8123/db") and o1["url"].endswith("h1:8123/db")
     assert o0["dbtable"] == "t" and o0["batchsize"] == "4096"
     assert "async_insert=1" in o0["sessionInitStatement"]  # S4 passthrough

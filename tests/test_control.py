@@ -252,3 +252,39 @@ def test_watchdog_restarts_failed_query(spark, tmp_path):
     finally:
         stop.set()
         app.stop_all()
+
+
+def test_cli_once_drains_every_task(spark, tmp_path):
+    """`python -m clickhouse_sinker_spark --config … --source-path …
+    --sink-path … --once`: every configured task drains the backlog into
+    its own table, laid out by shard (two hosts = two shards)."""
+    from clickhouse_sinker_spark.__main__ import main
+
+    _write_rows(tmp_path, "w0.jsonl", 40)
+    tasks = [
+        dict(_task_dict(name), tableName=f"tbl_{name}", shardingKey="name")
+        for name in ("ta", "tb")
+    ]
+    cfg = _cfg_dict(tasks)
+    cfg["clickhouse"] = {"hosts": [["h0"], ["h1"]]}
+    cfg_path = tmp_path / "sinker.json"
+    cfg_path.write_text(json.dumps(cfg))
+    main([
+        "--config", str(cfg_path),
+        "--source-path", str(tmp_path / "in"),
+        "--sink-path", str(tmp_path / "out"),
+        "--checkpoint", str(tmp_path / "ckpt"),
+        "--master", "local[4]",
+        "--once",
+    ])
+    for name in ("ta", "tb"):
+        table = tmp_path / "out" / f"tbl_{name}"
+        out = spark.read.parquet(str(table))
+        assert out.count() == 40
+        assert sorted(r.name for r in out.select("name").collect()) == sorted(
+            f"n{i}" for i in range(40)
+        )
+        assert sorted(p.name for p in table.glob("__shard=*")) == [
+            "__shard=0",
+            "__shard=1",
+        ]

@@ -35,3 +35,22 @@ def test_load_table_pins_dataframe_debugging_off(spark):
     # end-to-end again: the loader leaves the pinned state stable
     load_table(spark, SF_DIR, "events")
     assert _eu._enable_debugging_cache is False
+
+
+def test_pyspark_debugging_cache_pin_target_exists():
+    """The pin writes pyspark's private ``_enable_debugging_cache``.  It
+    must exist on a fresh import (checked in a new interpreter, since the
+    pin itself creates the attribute when missing) and must be what
+    ``is_debugging_enabled`` reads; a PySpark upgrade that renames it
+    fails here instead of silently un-pinning the capture."""
+    import subprocess
+    import sys
+
+    probe = (
+        "import pyspark.errors.utils as u\n"
+        "assert hasattr(u, '_enable_debugging_cache')\n"
+        "for v in (False, True):\n"
+        "    u._enable_debugging_cache = v\n"
+        "    assert u.is_debugging_enabled() is v\n"
+    )
+    subprocess.run([sys.executable, "-c", probe], check=True, timeout=120)
