@@ -1,18 +1,21 @@
 """CLI runner (C1 ≙ cmd/clickhouse_sinker/main.go:145-284, Spark-style):
 
     python -m clickhouse_sinker_spark --config task.hjson \
-        [--source-path dir_of_jsonl] [--sink-path out_dir] [--once]
+        [--source-path dir_of_topic_dirs] [--sink-path out_dir] [--once]
 
 Loads a reference-compatible config (hjson/json), builds one pipeline per
 task, and runs them.  Without ClickHouse/Kafka endpoints reachable (the
 usual test setup), ``--source-path``/``--sink-path`` swap in the file
 source and shard-partitioned parquet sink — the same pipeline graph with
 the transport exchanged, which is the Spark-idiomatic seam the tests use.
+In file mode each task reads ``<source-path>/<topic>/``, as each task
+consumes only its own topic from Kafka.
 """
 
 from __future__ import annotations
 
 import argparse
+import os
 
 from pyspark.sql import SparkSession
 
@@ -240,7 +243,10 @@ def _run_query(args) -> None:
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(prog="clickhouse_sinker_spark")
     ap.add_argument("--config", help="hjson/json task config (reference-compatible); omit in --nacos-addr mode")
-    ap.add_argument("--source-path", help="read JSONL files from this dir instead of Kafka")
+    ap.add_argument(
+        "--source-path",
+        help="read JSONL files from <dir>/<task topic>/ instead of Kafka",
+    )
     ap.add_argument("--sink-path", help="write shard-partitioned parquet here instead of JDBC")
     ap.add_argument("--checkpoint", default="/tmp/sinker_ckpt", help="checkpoint root")
     ap.add_argument("--master", default="local[*]")
@@ -373,7 +379,7 @@ def main(argv: list[str] | None = None) -> None:
 
         def source_factory(sp, task, c):
             return (
-                file_source(sp, args.source_path)
+                file_source(sp, os.path.join(args.source_path, task.topic))
                 if args.source_path
                 else kafka_source(
                     sp,

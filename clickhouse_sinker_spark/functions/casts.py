@@ -20,7 +20,10 @@ reference's parser_test matrix):
 - datetime strings matched against many layouts, first hit wins; epoch
   numbers scaled by a time unit; out-of-range → Epoch
   (parser/parser.go:31-65,204-226): ``parse_datetime_any``,
-  ``epoch_to_timestamp``.
+  ``epoch_to_timestamp``.  The layout parse is staged and shape-directed:
+  each string is tried only in the layouts its first and third characters
+  admit, and the day-name-normalised form is computed once per row, in a
+  helper column (``DateTimeStages``).
 - IP strings validated, invalid → 0.0.0.0 / :: (parser/fastjson.go:739-785):
   ``valid_ip_or_default``.
 
@@ -31,8 +34,11 @@ so no overflow is possible, and error paths use ``try_*`` variants.
 from __future__ import annotations
 
 import datetime as _dt
+import itertools
+import re
+from typing import Callable
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..typemap import INT_BOUNDS
@@ -46,6 +52,7 @@ __all__ = [
     "valid_ip_or_default",
     "detect_datetime_layout",
     "parse_datetime_bound",
+    "DateTimeStages",
     "DATETIME_LAYOUTS",
 ]
 
@@ -255,8 +262,8 @@ DATETIME_LAYOUTS = [
     # "Mon Jan 2 15:04:05 2006" etc).  Spark cannot parse EEE day-names, so
     # ``_prenormalize`` strips the day-name prefix, collapses runs of
     # spaces (ANSIC pads the day: "Jan  2"), and maps the named zones
-    # GMT/UTC/UT to +00:00 before the chain runs; these layouts then match
-    # the stripped remainder.
+    # GMT/UTC/UT to +00:00; these layouts then match the stripped
+    # remainder.
     "dd MMM yyyy HH:mm:ss XXX",               # RFC1123  (after strip)
     "dd MMM yyyy HH:mm:ss X",                 # RFC1123Z (after strip)
     "MMM d HH:mm:ss yyyy",                    # ANSIC    (after strip)
@@ -264,11 +271,96 @@ DATETIME_LAYOUTS = [
     "dd-MMM-yy HH:mm:ss XXX",                 # RFC850   (after strip)
 ]
 
+_LETTERS = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
+_DIGITS = "0123456789"
+
+
+def _char_class(ch: str) -> str:
+    """'a' for an ASCII letter, 'd' for an ASCII digit, else ``ch`` itself
+    (the per-character map of ``_shape_signature``)."""
+    return "a" if ch in _LETTERS else "d" if ch in _DIGITS else ch
+
+
+def _layout_shape(fmt: str) -> str | None:
+    """The shape signature (class of the 1st char + class of the 3rd char)
+    of every string ``fmt`` can parse, or None if the pattern leaves it open.
+
+    Walks the pattern's leading fields: literals and the fixed-width
+    numbers (``yy``, ``MM``, ``dd``, ``HH``, ``mm``, ``ss``) have a known
+    width; a one-letter number is 1-2 digits, ``yyyy`` at least 4 digits
+    and ``MMM`` at least 3 letters (Locale.US month names), after which
+    positions depend on the value.  A signed year (``+12024``, ``-0001``)
+    starts with a sign, which no signature has, so such strings get every
+    layout; a year field after the start could carry one, so it stops."""
+    classes: list[str] = []
+    for m in re.finditer(r"'([^']*)'|([A-Za-z])\2*|(.)", fmt):
+        quoted, letter, lit = m.groups()
+        n = len(m.group(0))
+        if lit == "[" or quoted == "":  # an optional section or an escaped quote
+            break
+        if letter is None:
+            classes += [_char_class(ch) for ch in quoted or lit]
+        elif letter == "M" and n >= 3:
+            classes += ["a"] * 3
+            break
+        elif letter not in "yMdHms" or (letter == "y" and n != 2 and classes):
+            break  # zone, fraction, day name …, or a year that may be signed
+        else:
+            classes += ["d"] * n
+            if n != 2:
+                break
+    return classes[0] + classes[2] if len(classes) >= 3 else None
+
+
+# one row per layout: the shape of the strings it can parse
+_LAYOUT_SHAPES = {fmt: _layout_shape(fmt) for fmt in DATETIME_LAYOUTS}
+
+
+def _shape_signature(c: Column) -> Column:
+    """Per-row shape of a string: its 1st and 3rd characters, ASCII letters
+    mapped to 'a' and ASCII digits to 'd' (``_char_class`` in SQL)."""
+    return F.translate(
+        F.concat(F.substring(c, 1, 1), F.substring(c, 3, 1)),
+        _LETTERS + _DIGITS,
+        "a" * len(_LETTERS) + "d" * len(_DIGITS),
+    )
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string expression that parses to ``s`` whatever
+    the session's quoting confs: quotes spelled ``chr(39)``, and no
+    backslashes to escape (the layout patterns have none)."""
+    parts = [f"'{part}'" for part in s.split("'")]
+    return parts[0] if len(parts) == 1 else f"concat({', chr(39), '.join(parts)})"
+
+
+def _candidates(c: Column, layouts: list[str]) -> Column:
+    """The members of ``layouts`` that can match ``c``, in list order: a
+    literal map from each recognised signature to the layouts of that
+    shape (and those of open shape); an unrecognised signature gets the
+    whole list.  A layout is skipped only where the string's 1st or 3rd
+    character cannot be what the layout puts there.  The constants are SQL
+    text, one parse each, not one py4j call per element."""
+
+    def array(fmts: list[str]) -> str:
+        return f"array({', '.join(map(_sql_str, fmts))})"
+
+    shapes = sorted({_LAYOUT_SHAPES[f] for f in layouts} - {None})
+    by_shape = ", ".join(
+        f"{_sql_str(sig)}, {array([f for f in layouts if _LAYOUT_SHAPES[f] in (sig, None)])}"
+        for sig in shapes
+    )
+    return F.coalesce(
+        F.try_element_at(F.expr(f"map({by_shape})"), _shape_signature(c)),
+        F.expr(array(layouts)),
+    )
+
+
 _DAYNAME_RE = r"^(Mon|Tue|Wed|Thu|Fri|Sat|Sun)[a-z]*,?\s+"
 
 
 def _prenormalize(c: Column) -> Column:
-    """Normalize day-name-family strings so the layout chain can parse them:
+    """Normalize day-name-family strings so the layouts can parse them:
     drop the (redundant) leading day name, collapse space runs, rewrite the
     fixed named zones to an offset.  Strictly widening — strings that
     already parse are untouched by every rule (\\bZ\\b cannot match the 'Z'
@@ -278,27 +370,118 @@ def _prenormalize(c: Column) -> Column:
     return F.regexp_replace(out, r"\b(GMT|UTC|UT)\b", "+00:00")
 
 
-def parse_datetime_any(col: Column | str, layouts: list[str] | None = None) -> Column:
-    """Try each layout in order; first parse wins (≙ parser/parser.go:160-202).
+class DateTimeStages:
+    """Helper columns of shape-directed DateTime parses, grouped by stage.
 
-    The reference memoizes the first successful layout per *field*; a
-    ``coalesce`` of ``try_to_timestamp`` gives the same result on homogeneous
-    fields (documented delta: heterogeneous fields parse per-value here).
-    Catalyst codegens the chain — no Python in the loop.
+    ``parse_datetime_any(col, stages)`` records each value its parse binds
+    (the source string, the first attempt, the candidate lists, the
+    normalised string …) as a helper column here and returns an expression
+    over those columns.  ``bind(df)`` adds them to ``df`` as one narrow
+    projection per stage, each reading only earlier stages: every value is
+    computed once per row, Catalyst's CollapseProject keeps a projection
+    whose value is read more than once (cheap ones, like a plain column
+    reference, are merged away), and whole-stage codegen fuses them all
+    into one stage.  Build every parse first, then ``bind`` (the
+    expressions name columns that only ``bind`` adds), then select the
+    parse expressions: the select drops the helpers by not naming them.
+    Helper names (``__dt0``, ``__dt1`` …) are unique per instance, so bind
+    one instance per select."""
+
+    def __init__(self) -> None:
+        self._stages: list[dict[str, Column]] = []
+        self._depth = 0
+        self._ids = itertools.count()
+
+    def _let(self, value: Column, body: Callable[[Column], Column]) -> Column:
+        if self._depth == len(self._stages):
+            self._stages.append({})
+        name = f"__dt{next(self._ids)}"
+        self._stages[self._depth][name] = value
+        self._depth += 1
+        try:
+            return body(F.col(name))
+        finally:
+            self._depth -= 1
+
+    def bind(self, df: DataFrame) -> DataFrame:
+        for stage in self._stages:
+            df = df.withColumns(stage)
+        return df
+
+    def filter(self, df: DataFrame, cond: Column) -> DataFrame:
+        """``df.filter(cond)`` for ``df`` a select over this instance's
+        helpers.  Catalyst pushes a filter below every deterministic
+        projection, substituting each alias's definition into the condition:
+        below the helper projections that re-inlines every bound value many
+        times over (the normalised string and the source field dozens of
+        times), the shape the helpers exist to avoid, and planning one
+        micro-batch took seconds.  A non-deterministic field
+        (``spark_partition_id()``, read by the condition so it is not
+        pruned) in the projection under the filter keeps the filter above
+        it, testing the projected values."""
+        if not self._stages:
+            return df.filter(cond)
+        keep = F.col("__dt_keep")
+        return (
+            df.withColumn("__dt_keep", F.spark_partition_id())
+            .filter(cond & (keep >= 0))
+            .drop("__dt_keep")
+        )
+
+
+def _let_in_lambda(value: Column, body: Callable[[Column], Column]) -> Column:
+    """Bind ``value`` once through a one-element ``transform``, for parses
+    inside higher-order-function lambdas (array elements, map values), which
+    run interpreted anyway.  At the top level this would take the whole
+    projection out of whole-stage codegen: use ``DateTimeStages`` there."""
+    return F.transform(F.array(value), body)[0]
+
+
+def parse_datetime_any(col: Column | str, stages: DateTimeStages | None = None) -> Column:
+    """Try the layouts in order; first parse wins (≙ parser/parser.go:160-202).
+
+    The reference memoizes the first successful layout per *field*; this
+    gives the same result on homogeneous fields (documented delta:
+    heterogeneous fields parse per-value here; the reference's
+    detect-then-bind mode is ``detect_datetime_layout`` +
+    ``parse_datetime_bound``).  A staged, shape-directed parse, all JVM-side:
+
+    1. ``r0``: the raw string in layout 0 (RFC3339, the ETL hot path).
+    2. If that fails, the raw string in the layouts its shape admits
+       (``_candidates``: first-character class and third character decide,
+       e.g. ``dd/MM/yyyy`` needs a '/' third; an unrecognised shape gets
+       every layout).
+    3. If none matches, ``p = _prenormalize(c)``, computed once, in the
+       layouts *its* shape admits.
+
+    Same result as trying all layouts raw and then all normalised (the
+    test oracle): a layout is skipped only where it cannot match, and
+    ``_prenormalize`` is strictly widening, so a raw hit is the result the
+    normalised attempts would give.  A day-name string costs ~4 failed
+    parses instead of ~27.
+
+    Each bound value must be computed once per row, or the expression
+    grows past what codegen compiles.  With ``stages``, the values become
+    helper columns that ``stages.bind(df)`` adds before the select that
+    reads the returned expression (how ``operators.project`` uses it).
+    Without, they are bound by ``_let_in_lambda``: only for use inside
+    higher-order-function lambdas.
     """
     c = F.col(col) if isinstance(col, str) else col
-    layouts = layouts or DATETIME_LAYOUTS
-    # Fast path: try the raw string first.  ``_prenormalize`` is strictly
-    # widening (strings that parse raw are untouched by every rule), so a
-    # raw success is always the same result the normalized chain would give
-    # — but the common case (well-formed RFC3339, the ETL hot path) now
-    # costs one try_to_timestamp instead of three regexp_replaces plus one.
-    # Day-name/GMT/padded strings fail every raw attempt (no layout admits
-    # an EEE prefix) and fall through to the normalized chain unchanged.
-    raw = [F.try_to_timestamp(c, F.lit(fmt)) for fmt in layouts]
-    pre = _prenormalize(c)
-    normalized = [F.try_to_timestamp(pre, F.lit(fmt)) for fmt in layouts]
-    return F.coalesce(*raw, *normalized)
+    let = stages._let if stages is not None else _let_in_lambda
+    first, rest = DATETIME_LAYOUTS[0], DATETIME_LAYOUTS[1:]
+    slots = [F.lit(k) for k in range(len(DATETIME_LAYOUTS))]
+
+    def attempts(s: Column, cand: Column, n: int) -> list[Column]:
+        return [F.try_to_timestamp(s, F.get(cand, k)) for k in slots[:n]]
+
+    return let(c, lambda c:
+        let(F.try_to_timestamp(c, F.lit(first)), lambda r0:
+        let(F.when(r0.isNull(), _candidates(c, rest)), lambda cand_raw:
+        let(F.coalesce(r0, *attempts(c, cand_raw, len(rest))), lambda raw:
+        let(F.when(raw.isNull(), _prenormalize(c)), lambda p:
+        let(F.when(p.isNotNull(), _candidates(p, DATETIME_LAYOUTS)), lambda cand_p:
+        F.coalesce(raw, *attempts(p, cand_p, len(DATETIME_LAYOUTS)))))))))  # fmt: skip
 
 
 def epoch_to_timestamp(col: Column | str, time_unit: float = 1.0) -> Column:

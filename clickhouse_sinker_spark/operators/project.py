@@ -14,12 +14,15 @@ reference semantics:
 - constant-field injection (P5, parser/parser.go:82-86)
 - null-reject filter on non-nullable columns (P16, task/task.go:303-314)
 
-Everything is a Column expression — one ``select`` that Catalyst folds into
-a single codegen stage; at 100 TB this is a pure map, no shuffle.
+Everything is a Column expression — one ``select`` (after the narrow
+pre-projections of any DateTime layout parse) that whole-stage codegen fuses
+into a single stage; at 100 TB this is a pure map, no shuffle.
 """
 
 from __future__ import annotations
 
+import functools
+import operator
 import re
 from dataclasses import dataclass, field
 
@@ -29,6 +32,7 @@ from pyspark.sql import types as ST
 
 from ..typemap import CHType, parse_ch_type, to_spark_type
 from ..functions.casts import (
+    DateTimeStages,
     cast_with_default,
     default_literal,
     epoch_to_timestamp,
@@ -166,13 +170,16 @@ def _cast_expr(
     not_nullable: bool,
     time_unit: float,
     src_type: ST.DataType | None = None,
+    stages: DateTimeStages | None = None,
 ) -> Column:
     """Build the reference-semantics cast from a source column to a CH type.
 
     ``src_type`` (when the source DataFrame schema is known) picks the
     DateTime path statically — native timestamp passthrough vs epoch
     scaling vs layout parsing — mirroring how the reference dispatches on
-    the parsed JSON value kind (parser/fastjson.go:457-510).
+    the parsed JSON value kind (parser/fastjson.go:457-510).  ``stages``
+    collects the helper columns of a top-level layout parse (see
+    ``parse_datetime_any``); element casts inside lambdas pass none.
     """
     nullable = t.nullable and not not_nullable
     name = t.name
@@ -255,12 +262,12 @@ def _cast_expr(
         elif isinstance(src_type, ST.NumericType):
             out = epoch_to_timestamp(src, unit)  # epoch scaled (P10)
         elif isinstance(src_type, ST.StringType):
-            out = parse_datetime_any(src)  # layout detection (P9)
+            out = parse_datetime_any(src, stages)  # layout detection (P9)
         else:
             num = src.try_cast("double")
             out = F.coalesce(
                 F.when(num.isNotNull(), epoch_to_timestamp(num, unit)),
-                parse_datetime_any(src.cast("string")),
+                parse_datetime_any(src.cast("string"), stages),
             )
     elif name == "IPv4":
         out = valid_ip_or_default(src.cast("string"), v6=False)
@@ -304,8 +311,11 @@ def build_projection(
     specs: list[ColumnSpec],
     schema: ST.StructType | None = None,
     parser: str = "fastjson",
+    stages: DateTimeStages | None = None,
 ) -> list[Column]:
-    """One aliased Column per destination column."""
+    """One aliased Column per destination column.  With ``stages``, the
+    DateTime layout parses read helper columns that ``stages.bind(df)``
+    must add before the select (``apply_projection`` does both)."""
     cols: list[Column] = []
     for s in specs:
         if s.constant is not None:  # P5 constant-field injection
@@ -318,7 +328,9 @@ def build_projection(
         src = source_col(src_name, parser)
         src_type = _resolve_src_type(schema, src_name, parser)
         cols.append(
-            _cast_expr(src, s.parsed, s.not_nullable, s.time_unit, src_type).alias(s.name)
+            _cast_expr(src, s.parsed, s.not_nullable, s.time_unit, src_type, stages).alias(
+                s.name
+            )
         )
     return cols
 
@@ -330,13 +342,22 @@ def apply_projection(
     parser: str = "fastjson",
 ) -> DataFrame:
     """select(cast exprs) + null-reject filter on NOT-NULL columns
-    (task/task.go:303-314: a null in a non-nullable column drops the row)."""
-    out = df.select(*build_projection(specs, df.schema, parser))
-    if null_reject:
-        for s in specs:
-            if s.not_nullable and s.constant is None:
-                out = out.filter(F.col(s.name).isNotNull())
+    (task/task.go:303-314: a null in a non-nullable column drops the row).
+    DateTime-from-string columns get their parse's helper columns in narrow
+    pre-projections; the select drops them, and the filter stays above it
+    (``DateTimeStages.filter``)."""
+    out, stages = _project(df, specs, parser)
+    keep = [F.col(s.name).isNotNull() for s in specs if s.not_nullable and s.constant is None]
+    if null_reject and keep:
+        out = stages.filter(out, functools.reduce(operator.and_, keep))
     return out
+
+
+def _project(df: DataFrame, specs: list[ColumnSpec], parser: str):
+    """The projected DataFrame and the DateTimeStages its parses bound."""
+    stages = DateTimeStages()
+    cols = build_projection(specs, df.schema, parser, stages)
+    return stages.bind(df).select(*cols), stages
 
 
 def validate_rows(df: DataFrame, specs: list[ColumnSpec], parser: str = "fastjson"):
@@ -350,7 +371,7 @@ def validate_rows(df: DataFrame, specs: list[ColumnSpec], parser: str = "fastjso
     naming the violated columns.  Both splits come from one projection —
     at scale this is a predicate fork, not a second pass.
     """
-    projected = apply_projection(df, specs, null_reject=False, parser=parser)
+    projected, stages = _project(df, specs, parser)
     required = [s.name for s in specs if s.not_nullable]
     if not required:
         return projected, projected.limit(0).withColumn("__reject_reason", F.lit(""))
@@ -359,6 +380,6 @@ def validate_rows(df: DataFrame, specs: list[ColumnSpec], parser: str = "fastjso
         *[F.when(F.col(c).isNull(), F.lit(c)) for c in required],
     )
     flagged = projected.withColumn("__reject_reason", reason)
-    good = flagged.filter(F.col("__reject_reason") == "").drop("__reject_reason")
-    bad = flagged.filter(F.col("__reject_reason") != "")
+    good = stages.filter(flagged, F.col("__reject_reason") == "").drop("__reject_reason")
+    bad = stages.filter(flagged, F.col("__reject_reason") != "")
     return good, bad

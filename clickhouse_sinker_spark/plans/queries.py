@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.casts import (
+    DateTimeStages,
     epoch_to_timestamp,
     parse_datetime_any,
     valid_ip_or_default,
@@ -869,8 +870,11 @@ def etl_default(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def etl_datetime_layouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-layout datetime detection (P9, parser/parser.go:31-65): strings
-    in different layouts all parse through one coalesce chain of
-    try_to_timestamp — Catalyst codegens it; no Python.  Includes the
+    in different layouts all parse through the staged, shape-directed parse
+    of ``parse_datetime_any`` (first layout raw, then the layouts each
+    string's shape admits, then the same on the normalised string), its
+    helper columns bound by ``DateTimeStages`` — one codegen stage; no
+    Python.  Includes the
     day-name family (RFC1123 "Tue, 03 Jun 2025 10:00:00 GMT" and ANSIC
     "Tue Jun 3 10:00:00 2025", parser/parser.go:31-44): the oracle holds
     the second-truncated source timestamp, so a silent parse-to-null or a
@@ -880,13 +884,14 @@ def etl_datetime_layouts(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_iso = F.date_format("ts", "yyyy-MM-dd HH:mm:ss")
     s_rfc1123 = F.concat(F.date_format("ts", "EEE, dd MMM yyyy HH:mm:ss"), F.lit(" GMT"))
     s_ansic = F.date_format("ts", "EEE MMM d HH:mm:ss yyyy")
-    return e.select(
-        "event_id",
-        parse_datetime_any(s_dmy).alias("d_dmy"),
-        parse_datetime_any(s_iso).alias("d_iso"),
-        parse_datetime_any(s_rfc1123).alias("d_rfc1123"),
-        parse_datetime_any(s_ansic).alias("d_ansic"),
-    )
+    stages = DateTimeStages()
+    parsed = [
+        parse_datetime_any(s, stages).alias(name)
+        for name, s in [
+            ("d_dmy", s_dmy), ("d_iso", s_iso), ("d_rfc1123", s_rfc1123), ("d_ansic", s_ansic)
+        ]
+    ]
+    return stages.bind(e).select("event_id", *parsed)
 
 
 @query(

@@ -29,6 +29,7 @@ rejected by null-reject are filtered before the sink with observe counters.
 
 from __future__ import annotations
 
+import logging
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -91,20 +92,35 @@ _PARQUET_CODEC = "zstd"
 # concurrent shard writers of JdbcSink (the worker-pool width)
 _MAX_SHARD_WRITERS = 8
 
+_log = logging.getLogger(__name__)
+
 
 def with_retry(fn, retry_times: int, base_sleep: float = 1.0):
     """Retry loop ≙ loopWrite (output/clickhouse.go:264-295): ``retry_times``
     attempts (∞ if <= 0), backoff doubling from ``base_sleep`` up to 60 s,
-    re-raise on exhaustion."""
+    re-raise on exhaustion.  Each failed attempt that is retried logs one
+    warning whose ``extra`` fields (``attempt``, ``retry_times``,
+    ``sleep_s``, ``error``) carry the same facts as its message."""
     attempt = 0
     while True:
         try:
             return fn()
-        except Exception:
+        except Exception as e:
             attempt += 1
             if retry_times > 0 and attempt >= retry_times:
                 raise
-            time.sleep(min(base_sleep * (2 ** (attempt - 1)), 60.0))
+            sleep_s = min(base_sleep * (2 ** (attempt - 1)), 60.0)
+            error = f"{type(e).__name__}: {e}"
+            _log.warning(
+                "write attempt %d of %s failed, retrying in %.3g s: %s",
+                attempt,
+                retry_times if retry_times > 0 else "unlimited",
+                sleep_s,
+                error,
+                extra={"attempt": attempt, "retry_times": retry_times,
+                       "sleep_s": sleep_s, "error": error},
+            )
+            time.sleep(sleep_s)
 
 
 def _write_parquet(batch: DataFrame, path: str, mode: str, by_shard: bool) -> None:

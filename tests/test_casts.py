@@ -210,7 +210,7 @@ def test_projection_matrix(spark):
 def test_detect_then_bind_commits_first_layout(spark):
     """Strict P9 mode: the first matching layout is committed per field;
     later values in other layouts return NULL (parser/parser.go:160-189),
-    unlike parse_datetime_any which retries all layouts per value."""
+    unlike parse_datetime_any, which picks the layout per value."""
     from clickhouse_sinker_spark.functions.casts import (
         detect_datetime_layout,
         parse_datetime_any,
@@ -465,3 +465,156 @@ def test_int_literal_translate_predicate_matches_regex(spark):
     for r, c in zip(got, cases):
         # NULL input: both forms yield NULL → same falsy branch in CaseWhen
         assert bool(r.fast) == bool(r.re), f"predicate diverges at {c!r}"
+
+
+# --- the staged, shape-directed DateTime parse against the chain it replaced ---
+
+
+def _chain_oracle(c):
+    """The previous parse_datetime_any, frozen: every layout on the raw
+    string, then every layout on the normalised string, first hit wins."""
+    from clickhouse_sinker_spark.functions.casts import DATETIME_LAYOUTS, _prenormalize
+
+    pre = _prenormalize(c)
+    return F.coalesce(
+        *[F.try_to_timestamp(c, F.lit(f)) for f in DATETIME_LAYOUTS],
+        *[F.try_to_timestamp(pre, F.lit(f)) for f in DATETIME_LAYOUTS],
+    )
+
+
+def _render(fmt: str, t: dt.datetime, rng) -> str:
+    """``t`` in the Spark pattern ``fmt``; optional fractions, offsets and
+    zone names drawn from ``rng``."""
+    import re
+
+    def field(m):
+        tok = m.group(0)
+        if tok.startswith("[."):
+            return rng.choice(["", ".5", ".123", ".123456789"])
+        return {
+            "XXX": lambda: rng.choice(["Z", "+08:00", "-05:30", "+00:00"]),
+            "X": lambda: rng.choice(["Z", "+08", "-0530"]),
+            "zzz": lambda: rng.choice(["UTC", "GMT", "MST", "PST"]),
+            "d": lambda: str(t.day),
+            "'T'": lambda: "T",
+        }.get(tok, lambda: t.strftime({
+            "yyyy": "%Y", "yy": "%y", "MMM": "%b", "MM": "%m", "dd": "%d",
+            "HH": "%H", "mm": "%M", "ss": "%S",
+        }[tok]))()
+
+    return re.sub(r"yyyy|yy|MMM|MM|dd|d|HH|mm|ss|'T'|\[\.S+\]|XXX|X|zzz", field, fmt)
+
+
+# strings the shape dispatch must not misroute: single-digit days, short,
+# 5-digit and signed years, lower/upper-case names, tabs, leading and
+# trailing spaces, named zones, impossible dates, empty, non-ASCII, NULL
+DT_HOSTILE = [
+    "Mon, 2 Jan 2006 15:04:05 GMT", "Mon Jan 2 15:04:05 2006", "2/01/2006",
+    "1/2/2006 03:04:05", "2006-1-2", "24-01-05", "024-01-05", "12024-01-05",
+    "+12024-01-05T00:00:00Z", "-0001-01-01", "+2024-01-05", "mon, 02 jan 2006 15:04:05 gmt",
+    "MON JAN  2 15:04:05 2006", "monday, 02-jan-06 15:04:05 GMT", "Mon,\t02 Jan 2006 15:04:05 GMT",
+    "Mon\tJan\t 2 15:04:05 2006", " 2024-01-05T03:04:05Z", "2024-01-05T03:04:05Z ",
+    "  Mon, 02 Jan 2006 15:04:05 GMT", "Mon, 02 Jan 2006 15:04:05 UT",
+    "Mon, 02 Jan 2006 15:04:05 UTC", "Mon Jan  2 15:04:05 MST 2006",
+    "Mon Jan  2 15:04:05 GMT 2006", "Mon, 02 Jan 2006 15:04:05 MST", "30/02/2024",
+    "2024-02-30", "Feb 30 10:00:00 2024", "", " ", "Z", "12", "2024", "Jan",
+    "２０２４-01-05", "Ｍon, 02 Jan 2006 15:04:05 GMT", "2024/01/05", "20240105 03:04:05",
+    "02 Jan 06 15:04 +0100", "02 Jan 06 15:04 +01:00", "Sept 2 15:04:05 2006",
+    "Tue, 03 Jun 2025 10:00:00 +0200", "not a date", None,
+]
+
+DT_SESSIONS = [
+    {"spark.sql.ansi.enabled": ansi, "spark.sql.session.timeZone": tz}
+    for ansi in ("true", "false")
+    for tz in ("UTC", "America/Los_Angeles")
+]
+
+
+def _dt_corpus() -> list[str | None]:
+    """Every DATETIME_LAYOUTS member rendered from seeded instants, the
+    three day-name families of perfbench's ``drain_daynames`` (RFC1123 GMT,
+    ANSIC with a space-padded day, RFC850), and DT_HOSTILE."""
+    import random
+
+    from clickhouse_sinker_spark.functions.casts import DATETIME_LAYOUTS
+
+    rng = random.Random(5)
+    out: list[str | None] = list(DT_HOSTILE)
+    for _ in range(40):
+        t = dt.datetime(1971, 1, 1) + dt.timedelta(seconds=rng.randrange(2 * 10**9))
+        out += [_render(f, t, rng) for f in DATETIME_LAYOUTS]
+        out += [
+            t.strftime("%a, %d %b %Y %H:%M:%S GMT"),
+            t.strftime("%a %b ") + "%2d" % t.day + t.strftime(" %H:%M:%S %Y"),
+            t.strftime("%A, %d-%b-%y %H:%M:%S GMT"),
+        ]
+    return out
+
+
+@pytest.mark.parametrize(
+    "conf", DT_SESSIONS, ids=lambda c: f"ansi_{c['spark.sql.ansi.enabled']}-{c['spark.sql.session.timeZone']}"
+)
+def test_shape_directed_parse_matches_chain(spark, conf):
+    """The staged parse (bound by DateTimeStages, as in apply_projection)
+    and its lambda-bound form (array elements) give the frozen chain's
+    result for every string, in every session: ANSI on/off, and a zone
+    with DST (the zzz layout reads MST/PST through it)."""
+    from clickhouse_sinker_spark.functions.casts import DateTimeStages
+    from .diff_util import assert_equal_collect
+
+    corpus = _dt_corpus()
+    base = lambda s: s.createDataFrame([(i, v) for i, v in enumerate(corpus)], "i int, s string")  # noqa: E731
+
+    def staged(s):
+        st = DateTimeStages()
+        parsed = parse_datetime_any("s", st)
+        return st.bind(base(s)).select("i", "s", F.unix_micros(parsed))
+
+    def in_lambda(s):
+        parsed = F.transform(F.array("s"), lambda v: parse_datetime_any(v))[0]
+        return base(s).select("i", "s", F.unix_micros(parsed))
+
+    def chain(s):
+        return base(s).select("i", "s", F.unix_micros(_chain_oracle(F.col("s"))))
+
+    assert_equal_collect(spark, staged, chain, conf)
+    assert_equal_collect(spark, in_lambda, chain, conf)
+    # the corpus exercises both the fast path and the fallback
+    with_ts = chain(spark).where(F.col("s").isNotNull()).collect()
+    assert sum(r[2] is not None for r in with_ts) > len(with_ts) // 2
+
+
+def test_datetime_projection_stays_in_whole_stage_codegen(spark):
+    """apply_projection of a string ``ts`` → NOT NULL DateTime compiles
+    (codegen fallback off, so a janino failure like "Code grows beyond
+    64 KB" raises instead of running interpreted), every Project and the
+    null-reject Filter sit under WholeStageCodegen, the Filter tests the
+    projected value rather than a re-inlined copy of the parse, and no
+    generated method exceeds HotSpot's 8000-byte JIT limit (the 30-attempt
+    chain compiled to a ~17 KB method, which the JVM runs interpreted)."""
+    from .diff_util import session_conf
+
+    specs = [
+        ColumnSpec("time", "DateTime", source="ts", not_nullable=True),
+        ColumnSpec("id", "Int64", not_nullable=True),
+    ]
+    ts = F.timestamp_seconds(F.lit(946684800) + F.col("id") * 7919)
+    df = spark.range(300).select(
+        "id",
+        F.when(F.col("id") % 2 == 0, F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'"))
+        .otherwise(F.date_format(ts, "EEE, dd MMM yyyy HH:mm:ss 'GMT'"))
+        .alias("ts"),
+    )
+    with session_conf(spark, {"spark.sql.codegen.fallback": "false"}):
+        out = apply_projection(df, specs)
+        rows = out.collect()
+        plan = out._jdf.queryExecution().executedPlan()
+        lines = plan.toString().splitlines()
+        projects = [ln for ln in lines if "Project [" in ln]
+        filters = [ln for ln in lines if "Filter " in ln]
+        assert projects and all("*(" in ln for ln in projects + filters), plan.toString()
+        assert filters and not any("gettimestamp" in ln for ln in filters), filters
+        stats = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+        sizes = [stats.apply(i)._3().maxMethodCodeSize() for i in range(stats.size())]
+    assert len(rows) == 300 and all(r.time is not None for r in rows)
+    assert sizes and max(sizes) <= 8000, sizes

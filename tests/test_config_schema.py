@@ -81,6 +81,25 @@ def test_with_retry_succeeds_after_failures():
     assert calls["n"] == 3
 
 
+def test_with_retry_logs_each_retried_attempt(caplog):
+    """One structured warning per failed attempt that is retried: two
+    failures, two records, then the return value."""
+    calls = {"n": 0}
+
+    def flaky():
+        calls["n"] += 1
+        if calls["n"] <= 2:
+            raise ConnectionError(f"refused {calls['n']}")
+        return "ok"
+
+    with caplog.at_level("WARNING", logger="clickhouse_sinker_spark.streaming.sink"):
+        assert with_retry(flaky, retry_times=5, base_sleep=0.001) == "ok"
+    recs = [r for r in caplog.records if r.name == "clickhouse_sinker_spark.streaming.sink"]
+    assert [(r.attempt, r.retry_times, r.sleep_s) for r in recs] == [(1, 5, 0.001), (2, 5, 0.002)]
+    assert [r.error for r in recs] == ["ConnectionError: refused 1", "ConnectionError: refused 2"]
+    assert all(r.levelname == "WARNING" and r.error in r.getMessage() for r in recs)
+
+
 def test_with_retry_exhausts():
     def always_fail():
         raise RuntimeError("down")

@@ -256,11 +256,15 @@ def test_watchdog_restarts_failed_query(spark, tmp_path):
 
 def test_cli_once_drains_every_task(spark, tmp_path):
     """`python -m clickhouse_sinker_spark --config … --source-path …
-    --sink-path … --once`: every configured task drains the backlog into
-    its own table, laid out by shard (two hosts = two shards)."""
+    --sink-path … --once`: every configured task drains its own topic's
+    backlog (``<source-path>/<topic>/``) into its own table, laid out by
+    shard (two hosts = two shards)."""
     from clickhouse_sinker_spark.__main__ import main
 
-    _write_rows(tmp_path, "w0.jsonl", 40)
+    staged = {"ta": range(40), "tb": range(100, 125)}
+    for topic, ids in staged.items():
+        (tmp_path / "in" / topic).mkdir(parents=True)
+        _write_rows(tmp_path, f"{topic}/w0.jsonl", len(ids), start=ids[0])
     tasks = [
         dict(_task_dict(name), tableName=f"tbl_{name}", shardingKey="name")
         for name in ("ta", "tb")
@@ -280,9 +284,8 @@ def test_cli_once_drains_every_task(spark, tmp_path):
     for name in ("ta", "tb"):
         table = tmp_path / "out" / f"tbl_{name}"
         out = spark.read.parquet(str(table))
-        assert out.count() == 40
         assert sorted(r.name for r in out.select("name").collect()) == sorted(
-            f"n{i}" for i in range(40)
+            f"n{i}" for i in staged[name]
         )
         assert sorted(p.name for p in table.glob("__shard=*")) == [
             "__shard=0",

@@ -123,7 +123,7 @@ _DT_LAYOUTS = [
 )
 def test_datetime_layout_roundtrip(spark, dts):
     """Any value formatted in any auto-detected layout parses back to the
-    same instant (truncated to the layout's precision) via the P9 chain."""
+    same instant (truncated to the layout's precision) via the P9 parse."""
     from clickhouse_sinker_spark.functions.casts import parse_datetime_any
 
     for fmt, prec in _DT_LAYOUTS:
@@ -143,7 +143,7 @@ def test_strict_layout_detect_then_bind(spark, data):
     that parses the field's first value, and every later value parses iff
     it matches THAT layout — values in other layouts go NULL (reference
     first-match-per-field memoization, parser/parser.go:160-189).  The
-    coalesce-chain parse_datetime_any stays the lenient default."""
+    shape-directed parse_datetime_any stays the lenient default."""
     import datetime as _d
 
     from clickhouse_sinker_spark.functions.casts import (
