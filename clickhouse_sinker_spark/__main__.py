@@ -9,7 +9,8 @@ usual test setup), ``--source-path``/``--sink-path`` swap in the file
 source and shard-partitioned parquet sink — the same pipeline graph with
 the transport exchanged, which is the Spark-idiomatic seam the tests use.
 In file mode each task reads ``<source-path>/<topic>/``, as each task
-consumes only its own topic from Kafka.
+consumes only its own topic from Kafka; with ``--once`` each topic's
+available files drain as one epoch (one micro-batch over all their splits).
 """
 
 from __future__ import annotations
@@ -250,7 +251,11 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--sink-path", help="write shard-partitioned parquet here instead of JDBC")
     ap.add_argument("--checkpoint", default="/tmp/sinker_ckpt", help="checkpoint root")
     ap.add_argument("--master", default="local[*]")
-    ap.add_argument("--once", action="store_true", help="drain available input, then exit")
+    ap.add_argument(
+        "--once",
+        action="store_true",
+        help="drain available input, then exit (file mode: a topic's files drain as one epoch)",
+    )
     ap.add_argument(
         "--watch",
         action="store_true",

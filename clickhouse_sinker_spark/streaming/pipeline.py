@@ -14,7 +14,9 @@ Each step maps 1:1 onto the reference:
   constant-field injection (P5); parse-error filter (P17).
 - projection: operators/project.py (P4-P16).
 - trigger(processingTime=FlushInterval) ≙ W1's count-or-time flush window
-  (the count half is maxOffsetsPerTrigger).
+  (the count half is maxOffsetsPerTrigger; in file mode it is
+  ``file_source``'s ``max_files``, off by default, so a trigger takes every
+  file available and ``run_available`` drains a backlog as one epoch).
 - checkpointing ≙ S7's commit barrier — offsets commit only after the
   foreachBatch sink returns, same at-least-once contract, engine-managed
   (task/sinker.go:521-559 hand-rolls this).
@@ -62,10 +64,16 @@ def kafka_source(
     return reader.load()
 
 
-def file_source(spark: SparkSession, path: str, max_files: int = 1) -> DataFrame:
-    """File-stream stand-in for Kafka in tests (FIXTURES.md): text files of
-    JSON lines, shaped like the Kafka source output (value + metadata)."""
-    raw = spark.readStream.format("text").option("maxFilesPerTrigger", max_files).load(path)
+def file_source(spark: SparkSession, path: str, max_files: int | None = None) -> DataFrame:
+    """File-stream stand-in for Kafka (FIXTURES.md, the CLI's --source-path):
+    text files of JSON lines, shaped like the Kafka source output (value +
+    metadata).  Each trigger admits every new file (one scan over all their
+    splits) unless ``max_files`` caps it, as ``maxOffsetsPerTrigger`` caps a
+    Kafka trigger."""
+    reader = spark.readStream.format("text")
+    if max_files:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    raw = reader.load(path)
     # pseudo-offset: content hash (monotonic ids are not allowed in streams)
     return raw.select(
         F.lit("file").alias("topic"),

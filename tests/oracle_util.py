@@ -69,28 +69,45 @@ def compare(spark_df, oracle_sql: str, sf_dir: str, float_tol: float = 0.0):
     ``sort_values`` canonicalizer cannot sort them, so a query that
     returns one is broken under the hard gate even when its values are
     correct."""
+    rec = compare_record(spark_df, oracle_sql, sf_dir, float_tol)
+    return rec["rows_match"], rec["err"] or "ok"
+
+
+def compare_record(spark_df, oracle_sql: str, sf_dir: str, float_tol: float = 0.0) -> dict:
+    """``compare`` as a ``CORRECTNESS_r*.json`` record: ``rows_match`` (the
+    verdict), ``schema_match`` (same column names), ``spark_rows`` /
+    ``oracle_rows`` and ``err`` (the first difference, else None).  Rows are
+    compared, not hashed, so ``hash_match`` is None."""
+    rec = {"rows_match": False, "schema_match": None, "hash_match": None,
+           "spark_rows": None, "oracle_rows": None, "err": None}
     bad = scalar_schema_violations(spark_df)
     if bad:
-        return False, (
+        rec["err"] = (
             f"driver-incompatible complex-typed Spark result columns {bad}: "
             "the driver canonicalizer (pandas sort_values) throws on "
             "list cells — serialize with arrayStringConcat(...) in the "
             "final SELECT"
         )
+        return rec
     sdf = spark_df.toPandas()
     con = duck_con(sf_dir)
     odf = con.sql(oracle_sql).df()
+    rec["spark_rows"], rec["oracle_rows"] = len(sdf), len(odf)
     bad = _complex_cells(odf)
     if bad:
-        return False, (
+        rec["err"] = (
             f"driver-incompatible complex-typed ORACLE result columns {bad}: "
             "serialize with array_to_string(...) in the oracle's final SELECT"
         )
+        return rec
     s_cols, o_cols = sorted(sdf.columns), sorted(odf.columns)
-    if s_cols != o_cols:
-        return False, f"columns differ: spark={s_cols} oracle={o_cols}"
+    rec["schema_match"] = s_cols == o_cols
+    if not rec["schema_match"]:
+        rec["err"] = f"columns differ: spark={s_cols} oracle={o_cols}"
+        return rec
     if len(sdf) != len(odf):
-        return False, f"row count differs: spark={len(sdf)} oracle={len(odf)}"
+        rec["err"] = f"row count differs: spark={len(sdf)} oracle={len(odf)}"
+        return rec
     s_rows = sorted(
         (tuple(_norm(v) for v in row) for row in sdf[s_cols].itertuples(index=False)),
         key=repr,
@@ -103,8 +120,10 @@ def compare(spark_df, oracle_sql: str, sf_dir: str, float_tol: float = 0.0):
         if a != b:
             if float_tol > 0 and _rows_close(a, b, float_tol):
                 continue
-            return False, f"row {i} differs:\n  spark : {a}\n  oracle: {b}"
-    return True, "ok"
+            rec["err"] = f"row {i} differs:\n  spark : {a}\n  oracle: {b}"
+            return rec
+    rec["rows_match"] = True
+    return rec
 
 
 def _rows_close(a, b, tol):

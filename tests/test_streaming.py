@@ -115,6 +115,82 @@ def test_parse_error_filter_and_constant_fields(spark, workdir):
     assert {r.name for r in rows} == {"const"}  # P5: fields win over message
 
 
+def test_run_available_drains_backlog_in_one_epoch(spark, workdir):
+    """W1 in file mode: with no ``max_files`` cap, ``run_available`` admits
+    every staged file at its one trigger, so a 3-file backlog lands as one
+    epoch (a one-file cap would make it three)."""
+    for k in range(3):
+        _write_jsonl(
+            workdir / "in" / f"f{k}.jsonl",
+            [{"time": "2024-01-01T00:00:00Z", "name": f"f{k}-{i}", "value": i, "price": 1.0}
+             for i in range(20)],
+        )
+    epochs = []
+    pipe = build_pipeline(file_source(spark, str(workdir / "in")), TaskConfig(name="one_epoch"),
+                          F1_SPECS, F1_SCHEMA)
+    pipe.run_available(lambda batch, epoch_id: epochs.append((epoch_id, batch.count())),
+                       str(workdir / "ckpt" / "one_epoch"))
+    assert [n for _, n in epochs if n] == [60]
+
+
+_DAYNAME_TS = ("Mon, 01 Jan 2024 10:00:00 GMT", "Tue Jan  2 11:30:00 2024",
+               "Wednesday, 03-Jan-24 12:00:00 GMT")
+
+
+def test_drain_one_epoch_equals_file_per_epoch(spark, workdir):
+    """Differential: the drain backlog (events dims, RFC3339 and day-name
+    ``ts``, malformed lines) lands the same rows, ``__shard`` included,
+    whether ``file_source`` admits one file per trigger or every file."""
+    from clickhouse_sinker_spark.config import normalize_tasks
+    from clickhouse_sinker_spark.sources.schema import json_parse_schema, specs_from_task
+
+    from .diff_util import assert_equal_collect
+
+    for k in range(4):
+        lines = []
+        for i in range(k * 50, (k + 1) * 50):
+            ts = (f"2024-01-{1 + i % 28:02d}T{i % 24:02d}:00:00Z" if i % 2
+                  else _DAYNAME_TS[i % 3])
+            lines.append(json.dumps({"event_id": i, "ts": ts, "user_id": i * 700 - 2000,
+                                     "event_type": f"t{i % 5}", "value": i / 4,
+                                     "props": f'{{"k": {i}}}'}))
+            if i % 7 == 0:
+                lines.append('{"event_id": %d, "ts": "2024' % i)  # truncated
+            if i % 11 == 0:
+                lines.append(f"garbage {i}")
+        (workdir / "in" / f"part-{k}.json").write_text("\n".join(lines) + "\n")
+    task = normalize_tasks([TaskConfig(
+        name="drain", table_name="events", sharding_key="event_id",
+        dims=(("event_id", "Int64", None), ("time", "DateTime", "ts"),
+              ("user_id", "UInt16", None), ("name", "String", "event_type"),
+              ("value", "Nullable(Float32)", None), ("props", "String", None)),
+    )])[0]
+    specs = specs_from_task(task)
+    schema = json_parse_schema(specs, parser=task.parser)
+
+    def drain(label, max_files):
+        epochs, out = [], str(workdir / "out" / label)
+        sink = ParquetSink(out, shards=2)
+
+        def counting_sink(batch, epoch_id):
+            epochs.append(epoch_id)
+            sink(batch, epoch_id)
+
+        raw = file_source(spark, str(workdir / "in"), max_files=max_files)
+        build_pipeline(raw, task, specs, schema, shards=2).run_available(
+            counting_sink, str(workdir / "ckpt" / label))
+        return out, len(epochs)
+
+    per_file, n_per_file = drain("per_file", 1)
+    whole, n_whole = drain("whole", None)
+    assert n_per_file >= 4 and n_whole == 1
+    landed = spark.read.parquet(whole)
+    assert landed.count() == 200
+    assert landed.filter(F.year("time") != 2024).count() == 0  # every ts layout parsed
+    assert_equal_collect(spark, lambda s: s.read.parquet(per_file),
+                         lambda s: s.read.parquet(whole))
+
+
 def test_f2_dynamic_schema_evolution(spark, workdir):
     """F2 (go.test.sh:20-45): new keys appear mid-stream; schema widens with
     inferred types; object/array keys ignored; old rows read as NULL."""

@@ -173,8 +173,9 @@ def test_registry_to_pipeline_to_health(spark, tmp_path, registry_server):
 def test_flush_triggers_and_watchdog_restart(spark, tmp_path):
     """W1 both flush triggers + W7 watchdog (VERDICT r5 item 8):
 
-    * count cap — ``maxFilesPerTrigger=1`` (the file-source analogue of
-      ``maxOffsetsPerTrigger``) splits a 3-file backlog into ≥3 batches;
+    * count cap — ``file_source(max_files=1)`` (the file-source analogue
+      of ``maxOffsetsPerTrigger``; uncapped by default) splits a 3-file
+      backlog into ≥3 batches;
     * time trigger — a file arriving AFTER the backlog drains is picked up
       by a later processing-time tick (its own epoch);
     * watchdog — an injected sink failure kills the query; the watchdog
@@ -221,7 +222,7 @@ def test_flush_triggers_and_watchdog_restart(spark, tmp_path):
     app = SinkerApp(
         spark=spark,
         checkpoint_root=str(tmp_path / "ckpt"),
-        source_factory=lambda sp, task, c: file_source(sp, str(in_dir)),
+        source_factory=lambda sp, task, c: file_source(sp, str(in_dir), max_files=1),
         sink_factory=lambda task, c: failing_sink,
     )
     wd = None

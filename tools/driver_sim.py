@@ -2,7 +2,12 @@
 driver window (or all, with --all) against its DuckDB oracle at sf0.01,
 under a HOSTILE SparkSession (non-UTC timezone, ANSI on) to prove the
 library pins its own runtime conf.  Exactly what the round driver records
-into CORRECTNESS_r{N}.json."""
+into CORRECTNESS_r{N}.json; ``--out PATH`` writes the run in that file's
+record shape (``tests.oracle_util.compare_record``), e.g.
+
+    python tools/driver_sim.py --all --out CORRECTNESS_r15.json
+"""
+import json
 import sys
 import time
 
@@ -22,7 +27,7 @@ def main() -> int:
     )
     sys.path.insert(0, "/root/repo")
     import __spark_entry__ as mod
-    from tests.oracle_util import compare
+    from tests.oracle_util import compare_record
 
     q, o = mod.queries(), mod.oracle_sql()
     names = list(q)
@@ -35,22 +40,29 @@ def main() -> int:
         names = wanted
     elif not run_all:
         names = names[:50]
-    bad = []
+    bad, records = [], {}
+    blank = dict.fromkeys(("rows_match", "schema_match", "hash_match", "spark_rows", "oracle_rows"))
     for i, name in enumerate(names):
         t0 = time.time()
         try:
             df = q[name](spark, sf_dir)
             if name in o:
-                ok, msg = compare(df, o[name], sf_dir)
+                rec = compare_record(df, o[name], sf_dir)
             else:
-                ok, msg = df.count() >= 0, "rows-only (no oracle)"
+                rec = {**blank, "spark_rows": df.count(), "err": "no_oracle"}
         except Exception as e:  # noqa: BLE001
-            ok, msg = False, f"EXC {type(e).__name__}: {e}"
+            rec = {**blank, "rows_match": False, "err": f"EXC {type(e).__name__}: {e}"}
+        records[name] = rec
+        ok = rec["rows_match"] is not False
         status = "ok" if ok else "FAIL"
         print(f"[{i+1:3}/{len(names)}] {name:35s} {status:4s} {time.time()-t0:5.1f}s"
-              + ("" if ok else f"  {msg[:300]}"), flush=True)
+              + ("" if ok else f"  {rec['err'][:300]}"), flush=True)
         if not ok:
             bad.append(name)
+    if "--out" in sys.argv:
+        with open(sys.argv[sys.argv.index("--out") + 1], "w") as f:
+            json.dump(records, f, indent=2)
+            f.write("\n")
     print(f"\n{'ALL GREEN' if not bad else 'FAILURES: ' + ', '.join(bad)}"
           f"  ({len(names) - len(bad)}/{len(names)})")
     return 1 if bad else 0
