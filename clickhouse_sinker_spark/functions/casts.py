@@ -53,6 +53,7 @@ __all__ = [
     "detect_datetime_layout",
     "parse_datetime_bound",
     "DateTimeStages",
+    "filter_above",
     "DATETIME_LAYOUTS",
 ]
 
@@ -410,23 +411,27 @@ class DateTimeStages:
 
     def filter(self, df: DataFrame, cond: Column) -> DataFrame:
         """``df.filter(cond)`` for ``df`` a select over this instance's
-        helpers.  Catalyst pushes a filter below every deterministic
-        projection, substituting each alias's definition into the condition:
-        below the helper projections that re-inlines every bound value many
-        times over (the normalised string and the source field dozens of
-        times), the shape the helpers exist to avoid, and planning one
-        micro-batch took seconds.  A non-deterministic field
-        (``spark_partition_id()``, read by the condition so it is not
-        pruned) in the projection under the filter keeps the filter above
-        it, testing the projected values."""
-        if not self._stages:
-            return df.filter(cond)
-        keep = F.col("__dt_keep")
-        return (
-            df.withColumn("__dt_keep", F.spark_partition_id())
-            .filter(cond & (keep >= 0))
-            .drop("__dt_keep")
-        )
+        helpers, kept above that select (``filter_above``): pushed below the
+        helper projections, the filter would re-inline every bound value
+        many times over (the normalised string and the source field dozens
+        of times), the shape the helpers exist to avoid, and planning one
+        micro-batch took seconds."""
+        return filter_above(df, cond) if self._stages else df.filter(cond)
+
+
+def filter_above(df: DataFrame, cond: Column) -> DataFrame:
+    """``df.filter(cond)``, evaluated on the values ``df``'s top projection
+    computed.  Catalyst pushes a filter below every deterministic
+    projection, substituting each alias's definition into the condition, so
+    an expensive value the condition reads (a decoded message, a bound
+    parse helper) is computed again inside the filter.  A non-deterministic
+    field (``spark_partition_id()``, read by the condition so it is not
+    pruned) in the projection under the filter keeps the filter above it."""
+    return (
+        df.withColumn("__barrier", F.spark_partition_id())
+        .filter(cond & (F.col("__barrier") >= 0))
+        .drop("__barrier")
+    )
 
 
 def _let_in_lambda(value: Column, body: Callable[[Column], Column]) -> Column:

@@ -162,7 +162,7 @@ def json_parse_schema(specs: list[ColumnSpec], parser: str = "fastjson"):
             # strings); typed keys (P14, parser/fastjson.go:336-406) are
             # produced by the projection's transform_keys cast.
             dt = T.MapType(T.StringType(), to_spark_type(t.map_value))
-        elif t.array:
+        elif t.array or t.name == "Object":  # Object('json') is a loose map<string,string>
             dt = to_spark_type(t)
         else:
             dt = T.DoubleType()

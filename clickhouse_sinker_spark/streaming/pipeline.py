@@ -10,8 +10,11 @@ Each step maps 1:1 onto the reference:
   timestamp — model/message.go:10-17); ``maxOffsetsPerTrigger`` ≈
   MaxFetchSize/BufferSize (W1/W2 backpressure), ``startingOffsets`` ≈
   earliest/latest, security options are passthrough config.
-- ``parse_stream``: P1/P2/P3 — from_json / from_csv on the value column;
-  constant-field injection (P5); parse-error filter (P17).
+- ``parse_stream``: P1/P2/P3 — one from_json / from_csv decode of the value
+  column; constant-field injection (P5); parse-error filter (P17): a JSON
+  message lands iff it is a JSON object, tested from the decode's
+  corrupt-record marker, with the exact map probe run only for the
+  messages the decode flags.
 - projection: operators/project.py (P4-P16).
 - trigger(processingTime=FlushInterval) ≙ W1's count-or-time flush window
   (the count half is maxOffsetsPerTrigger; in file mode it is
@@ -34,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import KafkaConfig, TaskConfig
+from ..functions.casts import filter_above
 from ..operators.project import KAFKA_META_COLUMNS, ColumnSpec, apply_projection
 from ..operators.sharding import ShardingPolicy, add_shard_column
 
@@ -102,26 +106,52 @@ def parse_stream(
     parser/parser.go:82-86 — note reference semantics: fields WIN over
     message content).  Unparseable messages are dropped and countable via
     ``observe`` (P17, task/task.go:178-186).
+
+    Each message is decoded once, like the reference's one fastjson parse.
+    The JSON decode adds a corrupt-record marker field to ``schema``; a
+    message lands iff it parses as a JSON object, i.e. iff
+    ``from_json(value, 'map<string,string>')`` is not null.  That probe
+    runs only on messages whose decode sets the marker (arrays, scalars,
+    malformed text, a type mismatch in a known field); a null decode is a
+    blank message and an unflagged one is an object already.  The filter
+    sits above the decode (``filter_above``), so it, and any NOT NULL
+    filter a projection pushes into it, reads the decoded struct instead
+    of decoding again.  CSV lands a non-blank line whose ``from_csv`` is
+    not null.
     """
     s = F.col("value").cast("string")
+    p = F.col("__parsed")
     if parser == "csv":
         cols = csv_format or [f.name for f in schema.fields]
         csv_schema = T.StructType([next(f for f in schema.fields if f.name == c) for c in cols])
         parsed = F.from_csv(s, csv_schema.simpleString(), {"sep": delimiter})
-        valid = parsed.isNotNull()
+        valid = p.isNotNull() & (F.trim(s) != "")
+        marker = None
     else:
-        parsed = F.from_json(s, schema)
-        # from_json is PERMISSIVE (all-null struct on bad input); the
-        # reference drops messages that fail to parse as a JSON *object*
-        # (task/task.go:178-186) — probe validity with a map parse, which
-        # is null exactly for invalid/non-object payloads.
-        valid = F.from_json(s, "map<string,string>").isNotNull()
-    out = raw.withColumn("__parsed", parsed).filter(valid & (F.trim(s) != ""))
+        marker = "__corrupt_record"
+        while marker in schema.fieldNames():
+            marker += "_"
+        with_marker = T.StructType([*schema.fields, T.StructField(marker, T.StringType())])
+        parsed = F.from_json(s, with_marker, {"columnNameOfCorruptRecord": marker})
+        # A null decode is a null or blank message.  An unflagged decode
+        # went through the probe's tokenizer over the whole object (unknown
+        # fields are skipped, but their strings are still checked), so it
+        # is an object by the probe's rule too.  A flagged one holds the
+        # whole message in the marker (a message key named like the marker
+        # is not read into it), so the probe reads the marker and the raw
+        # value is not carried past the decode.
+        flagged = p[marker]
+        valid = p.isNotNull() & (
+            flagged.isNull() | F.from_json(flagged, "map<string,string>").isNotNull()
+        )
+    out = filter_above(raw.withColumn("__parsed", parsed), valid)
     # metadata under its __kafka_* dim names, so message keys named topic,
     # partition, offset, key or timestamp map through ordinary dims
     out = out.select(
         *[F.col(src).alias(meta) for meta, src in KAFKA_META_COLUMNS.items()], "__parsed.*"
     )
+    if marker:
+        out = out.drop(marker)
     for k, v in (fields or {}).items():  # constants override message keys (P5)
         out = out.withColumn(k, F.lit(v))
     return out

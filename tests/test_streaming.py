@@ -191,6 +191,151 @@ def test_drain_one_epoch_equals_file_per_epoch(spark, workdir):
                          lambda s: s.read.parquet(whole))
 
 
+# The drain task's dims (perfbench's DRAIN_DIMS), and a gjson task whose
+# parse schema nests an array, a map, an Object('json') and a path.
+_DRAIN_DIMS = (("event_id", "Int64", None), ("time", "DateTime", "ts"),
+               ("user_id", "UInt16", None), ("name", "String", "event_type"),
+               ("value", "Nullable(Float32)", None), ("props", "String", None))
+_NESTED_DIMS = (("tags", "Array(String)", None), ("attrs", "Map(String, Int64)", None),
+                ("doc", "Object('json')", None), ("city", "String", "user.address.city"),
+                ("event_id", "Int64", None))
+
+# Every shape a message can take that parse_stream must land or drop exactly
+# as the map probe does.  Keys unknown to one schema are known to the other.
+_HOSTILE = [
+    '{"event_id": 1, "ts": "2024-01-01T00:00:00Z", "user_id": 7, "event_type": "click", '
+    '"value": 1.5, "props": "{\\"k\\": 1}"}',
+    '{"tags": ["a", "b"], "attrs": {"k": 1}, "doc": {"a": "b"}, '
+    '"user": {"address": {"city": "Oslo"}}, "event_id": 2}',
+    "{}",
+    "[]", '[{"event_id": 1}]', '[{"event_id": 1}, {"event_id": 2}]',
+    "1", '"s"', "true", "null",
+    "", " ", "\t", "\n", "\r\n", "\x0b", "\x0c", "\xa0", "\u3000", "\u2028", "\x00", "\ufeff",
+    '{"event_id": 3, "ts": "2024', "garbage", "{", "}",
+    '{"event_id": "abc"}', '{"value": {"a": 1}}', '{"value": [1]}',
+    '{"tags": "x"}', '{"attrs": {"k": "v"}}', '{"user": {"address": "Oslo"}}',
+    '{"event_id": 4, "event_id": 5}', '{"event_id": 6} trailing', '{"event_id": 7}{"event_id": 8}',
+    "{'event_id': 9}", "{event_id: 10}", '{"event_id": 11 /* c */}', '{"event_id": 12,}',
+    '{"event_id": 013}', '{"event_type": "\\q"}', '{"x": "\\q"}', '{"x": 014}',
+    '{"event_id": NaN}', '{"x": NaN}', '{"event_id": "abc", "x": NaN}',
+    '{"event_type": "a\x01b"}', '{"x": "a\x01b"}', '{"x": {"y": ["a\x1fb"]}}',
+    '{"user": {"address": {"zip": "\x02"}}}', '{"event_id": 15, "x": "\tb"}',
+    '{"__corrupt_record": "z", "event_id": 16}',
+    None,
+]
+
+
+def _hostile_raw(spark):
+    """The corpus as a source frame: one message per offset, fixed metadata."""
+    rows = [(i, None if m is None else bytearray(m.encode("utf-8"))) for i, m in enumerate(_HOSTILE)]
+    return spark.createDataFrame(rows, "offset bigint, value binary").select(
+        F.lit("t").alias("topic"), F.lit(0).alias("partition"), "offset",
+        F.lit(None).cast("binary").alias("key"), "value",
+        F.timestamp_seconds(F.lit(0)).alias("timestamp"))
+
+
+def _probe_rule(raw, schema):
+    """The oracle: the map-probe rule applied directly, to every message (a
+    struct decode, kept iff the map probe is not null and the message is
+    not blank)."""
+    from clickhouse_sinker_spark.operators.project import KAFKA_META_COLUMNS
+
+    s = F.col("value").cast("string")
+    kept = raw.withColumn("__parsed", F.from_json(s, schema)).filter(
+        F.from_json(s, "map<string,string>").isNotNull() & (F.trim(s) != ""))
+    return kept.select(*[F.col(src).alias(meta) for meta, src in KAFKA_META_COLUMNS.items()],
+                       "__parsed.*")
+
+
+def _as_json(df):
+    """One JSON string per row, so map values compare as multiset keys."""
+    return df.select(F.to_json(F.struct(*[F.col(f"`{c}`") for c in df.columns])))
+
+
+@pytest.mark.parametrize("ansi", ["true", "false"])
+@pytest.mark.parametrize("dims,parser", [(_DRAIN_DIMS, "fastjson"), (_NESTED_DIMS, "gjson")],
+                         ids=["drain", "nested"])
+def test_parse_stream_keeps_the_map_probe_rule(spark, dims, parser, ansi):
+    """Differential: parse_stream, which decodes each message once and
+    probes only the decodes it flags, lands the same messages with the same
+    decoded and projected values as the map-probe rule, over a hostile
+    corpus and with ANSI on and off."""
+    from clickhouse_sinker_spark.sources.schema import json_parse_schema, specs_from_task
+    from clickhouse_sinker_spark.streaming.pipeline import parse_stream
+
+    from .diff_util import assert_equal_collect, session_conf
+
+    specs = specs_from_task(TaskConfig(name="hostile", parser=parser, dims=dims))
+    schema = json_parse_schema(specs, parser=parser)
+    conf = {"spark.sql.ansi.enabled": ansi}
+
+    def once(s):
+        return parse_stream(_hostile_raw(s), schema, parser=parser)
+
+    def probed(s):
+        return _probe_rule(_hostile_raw(s), schema)
+
+    assert_equal_collect(spark, lambda s: _as_json(once(s)), lambda s: _as_json(probed(s)), conf)
+    assert_equal_collect(
+        spark,
+        lambda s: _as_json(apply_projection(once(s), specs, parser=parser)),
+        lambda s: _as_json(apply_projection(probed(s), specs, parser=parser)),
+        conf,
+    )
+    with session_conf(spark, conf):
+        landed = {r[0] for r in once(spark).select("__kafka_offset").collect()}
+    # the probe lands the objects the decode flags (a type mismatch, NaN
+    # after one); a key named like the marker does not flag its message
+    objects = {_HOSTILE.index(m) for m in ('{"event_id": "abc"}', '{"event_id": "abc", "x": NaN}',
+                                            '{"__corrupt_record": "z", "event_id": 16}')}
+    assert objects <= landed and 0 < len(landed) < len(_HOSTILE)
+
+
+def test_parse_stream_decodes_each_message_once(spark):
+    """The executed plan of parse_stream → apply_projection decodes the
+    message once (one struct from_json, one map probe behind it), with the
+    drain dims and with a projection without DateTime columns whose NOT NULL
+    filter Catalyst pushes into the parse filter; CSV decodes once too and
+    keeps its rule."""
+    from clickhouse_sinker_spark.sources.schema import json_parse_schema, specs_from_task
+    from clickhouse_sinker_spark.streaming.pipeline import parse_stream
+
+    from .diff_util import assert_equal_collect
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    narrow = (("user_id", "UInt16", None), ("name", "String", "event_type"))
+    for dims in (_DRAIN_DIMS, narrow):
+        specs = specs_from_task(TaskConfig(name="once", dims=dims))
+        parsed = parse_stream(_hostile_raw(spark), json_parse_schema(specs))
+        p = plan(apply_projection(parsed, specs))
+        assert p.count("from_json(StructField") == 1, p
+        assert p.count("from_json(MapType") == 1, p
+
+    csv_schema = T.StructType([T.StructField("a", T.IntegerType()),
+                               T.StructField("b", T.StringType())])
+
+    def csv_raw(s):
+        lines = ["1,x", "2", "", "  ", "abc,y", "3,z,extra", None]
+        return s.createDataFrame([(i, v) for i, v in enumerate(lines)], "offset bigint, v string") \
+            .select(F.lit("t").alias("topic"), F.lit(0).alias("partition"), "offset",
+                    F.lit(None).cast("binary").alias("key"), F.col("v").cast("binary").alias("value"),
+                    F.timestamp_seconds(F.lit(0)).alias("timestamp"))
+
+    csv = parse_stream(csv_raw(spark), csv_schema, parser="csv")
+    assert plan(csv).count("from_csv(") == 1, plan(csv)
+
+    def csv_rule(s):
+        v = F.col("value").cast("string")
+        parsed = F.from_csv(v, csv_schema.simpleString(), {"sep": ","})
+        return csv_raw(s).withColumn("p", parsed).filter(parsed.isNotNull() & (F.trim(v) != "")) \
+            .select(F.col("offset").alias("__kafka_offset"), "p.*")
+
+    assert_equal_collect(spark, lambda s: parse_stream(csv_raw(s), csv_schema, parser="csv")
+                         .select("__kafka_offset", "a", "b"), csv_rule)
+
+
 def test_f2_dynamic_schema_evolution(spark, workdir):
     """F2 (go.test.sh:20-45): new keys appear mid-stream; schema widens with
     inferred types; object/array keys ignored; old rows read as NULL."""

@@ -10,6 +10,7 @@ record shape (``tests.oracle_util.compare_record``), e.g.
 import json
 import sys
 import time
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -25,7 +26,7 @@ def main() -> int:
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent))  # this checkout
     import __spark_entry__ as mod
     from tests.oracle_util import compare_record
 
