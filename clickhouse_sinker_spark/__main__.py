@@ -25,6 +25,17 @@ from .streaming.pipeline import file_source, kafka_source
 from .streaming.sink import JdbcSink, ParquetSink
 
 
+def _session(master: str, app_name: str) -> SparkSession:
+    """The CLI's SparkSession: UTC session time zone, adaptive execution."""
+    return (
+        SparkSession.builder.master(master)
+        .appName(app_name)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.adaptive.enabled", "true")
+        .getOrCreate()
+    )
+
+
 def _run_query(args) -> None:
     """Ad-hoc ClickHouse-dialect query over a directory of parquet tables
     — the clickhouse-client seam for this engine: a reference user's CH
@@ -37,13 +48,7 @@ def _run_query(args) -> None:
     from .functions.chdialect import spark_catalog_info, translate_ch_sql
     from .sources.tables import load_table
 
-    spark = (
-        SparkSession.builder.master(args.master)
-        .appName("clickhouse_sinker_spark_query")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = _session(args.master, "clickhouse_sinker_spark_query")
     # Arrow-UDF scalar tier (base58/punycode/NFC/Jaro…) — the translator
     # emits ch_* names for them
     from .functions.chudfs import register_ch_udfs
@@ -374,13 +379,7 @@ def main(argv: list[str] | None = None) -> None:
         if args.watch and not args.config:
             ap.error("--watch polls a --config file; in --nacos-addr mode the "
                      "registry loop already re-assigns on config change")
-        spark = (
-            SparkSession.builder.master(args.master)
-            .appName("clickhouse_sinker_spark")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.adaptive.enabled", "true")
-            .getOrCreate()
-        )
+        spark = _session(args.master, "clickhouse_sinker_spark")
 
         def source_factory(sp, task, c):
             return (

@@ -282,18 +282,22 @@ def _char_class(ch: str) -> str:
     return "a" if ch in _LETTERS else "d" if ch in _DIGITS else ch
 
 
-def _layout_shape(fmt: str) -> str | None:
+def _layout_shape(fmt: str) -> tuple[str | None, bool]:
     """The shape signature (class of the 1st char + class of the 3rd char)
-    of every string ``fmt`` can parse, or None if the pattern leaves it open.
+    of every unsigned string ``fmt`` can parse, or None if the pattern
+    leaves it open; and whether its leading field is a year that may carry
+    a sign.
 
     Walks the pattern's leading fields: literals and the fixed-width
     numbers (``yy``, ``MM``, ``dd``, ``HH``, ``mm``, ``ss``) have a known
     width; a one-letter number is 1-2 digits, ``yyyy`` at least 4 digits
     and ``MMM`` at least 3 letters (Locale.US month names), after which
-    positions depend on the value.  A signed year (``+12024``, ``-0001``)
-    starts with a sign, which no signature has, so such strings get every
-    layout; a year field after the start could carry one, so it stops."""
+    positions depend on the value.  A year of other than 2 letters may be
+    signed (``+12024``, ``-0001``): leading, it lets the layout parse
+    sign-led strings, whose signature no layout has; after the start it
+    stops the walk."""
     classes: list[str] = []
+    signed = False
     for m in re.finditer(r"'([^']*)'|([A-Za-z])\2*|(.)", fmt):
         quoted, letter, lit = m.groups()
         n = len(m.group(0))
@@ -307,13 +311,15 @@ def _layout_shape(fmt: str) -> str | None:
         elif letter not in "yMdHms" or (letter == "y" and n != 2 and classes):
             break  # zone, fraction, day name …, or a year that may be signed
         else:
+            signed = letter == "y" and n != 2
             classes += ["d"] * n
             if n != 2:
                 break
-    return classes[0] + classes[2] if len(classes) >= 3 else None
+    return (classes[0] + classes[2] if len(classes) >= 3 else None), signed
 
 
-# one row per layout: the shape of the strings it can parse
+# one row per layout: the shape of the unsigned strings it can parse, and
+# whether it can parse a sign-led one
 _LAYOUT_SHAPES = {fmt: _layout_shape(fmt) for fmt in DATETIME_LAYOUTS}
 
 
@@ -335,25 +341,37 @@ def _sql_str(s: str) -> str:
     return parts[0] if len(parts) == 1 else f"concat({', chr(39), '.join(parts)})"
 
 
-def _candidates(c: Column, layouts: list[str]) -> Column:
-    """The members of ``layouts`` that can match ``c``, in list order: a
-    literal map from each recognised signature to the layouts of that
-    shape (and those of open shape); an unrecognised signature gets the
-    whole list.  A layout is skipped only where the string's 1st or 3rd
-    character cannot be what the layout puts there.  The constants are SQL
-    text, one parse each, not one py4j call per element."""
+def _candidate_lists(layouts: list[str]) -> dict[str | None, list[str]]:
+    """The members of ``layouts`` that can match a string, in list order,
+    by the string's signature: for each recognised signature, the layouts
+    of that shape and those of open shape.  Under None, the list for every
+    other signature (a sign, a space, a non-ASCII 1st or 3rd character,
+    fewer than 3 characters): the layouts of open shape and those led by a
+    year that may be signed, the only ones that can parse a string of no
+    layout's shape (a string that starts with whitespace or a non-ASCII
+    character fails every layout).  A layout is left out only where the
+    string's 1st or 3rd character cannot be what the layout puts there."""
+    shapes = sorted({_LAYOUT_SHAPES[f][0] for f in layouts} - {None})
+    lists: dict[str | None, list[str]] = {
+        sig: [f for f in layouts if _LAYOUT_SHAPES[f][0] in (sig, None)] for sig in shapes
+    }
+    lists[None] = [f for f in layouts if _LAYOUT_SHAPES[f][0] is None or _LAYOUT_SHAPES[f][1]]
+    return lists
+
+
+def _candidates(c: Column, lists: dict[str | None, list[str]]) -> Column:
+    """``c``'s candidate list from ``_candidate_lists``: a literal map from
+    each recognised signature to its list, the None list otherwise.  The
+    constants are SQL text, one parse each, not one py4j call per
+    element."""
 
     def array(fmts: list[str]) -> str:
         return f"array({', '.join(map(_sql_str, fmts))})"
 
-    shapes = sorted({_LAYOUT_SHAPES[f] for f in layouts} - {None})
-    by_shape = ", ".join(
-        f"{_sql_str(sig)}, {array([f for f in layouts if _LAYOUT_SHAPES[f] in (sig, None)])}"
-        for sig in shapes
-    )
+    by_shape = ", ".join(f"{_sql_str(sig)}, {array(fmts)}" for sig, fmts in lists.items() if sig)
     return F.coalesce(
         F.try_element_at(F.expr(f"map({by_shape})"), _shape_signature(c)),
-        F.expr(array(layouts)),
+        F.expr(array(lists[None])),
     )
 
 
@@ -455,7 +473,7 @@ def parse_datetime_any(col: Column | str, stages: DateTimeStages | None = None) 
     2. If that fails, the raw string in the layouts its shape admits
        (``_candidates``: first-character class and third character decide,
        e.g. ``dd/MM/yyyy`` needs a '/' third; an unrecognised shape gets
-       every layout).
+       only the layouts led by a year that may be signed).
     3. If none matches, ``p = _prenormalize(c)``, computed once, in the
        layouts *its* shape admits.
 
@@ -464,6 +482,12 @@ def parse_datetime_any(col: Column | str, stages: DateTimeStages | None = None) 
     ``_prenormalize`` is strictly widening, so a raw hit is the result the
     normalised attempts would give.  A day-name string costs ~4 failed
     parses instead of ~27.
+
+    Each stage has as many attempt slots as its longest candidate list (6
+    raw, 7 normalised), not one per layout: whole-stage codegen puts every
+    column of a projection into one generated method, and HotSpot does not
+    JIT-compile a method above 8 000 bytecode bytes, so every slot counts
+    against the whole micro-batch's budget.
 
     Each bound value must be computed once per row, or the expression
     grows past what codegen compiles.  With ``stages``, the values become
@@ -475,18 +499,29 @@ def parse_datetime_any(col: Column | str, stages: DateTimeStages | None = None) 
     c = F.col(col) if isinstance(col, str) else col
     let = stages._let if stages is not None else _let_in_lambda
     first, rest = DATETIME_LAYOUTS[0], DATETIME_LAYOUTS[1:]
-    slots = [F.lit(k) for k in range(len(DATETIME_LAYOUTS))]
+    raw_lists, p_lists = _candidate_lists(rest), _candidate_lists(DATETIME_LAYOUTS)
 
-    def attempts(s: Column, cand: Column, n: int) -> list[Column]:
-        return [F.try_to_timestamp(s, F.get(cand, k)) for k in slots[:n]]
+    def attempts(hit: Column, s: Column, cand: Column, lists: dict) -> Column:
+        """``coalesce(hit, try_to_timestamp(s, cand[0]), …)`` with one slot
+        per member of the longest candidate list; a slot past the end of
+        ``cand`` has a NULL format and costs nothing.  With ``stages`` the
+        arguments are helper columns, named in one SQL text; a lambda
+        variable has no name SQL text can read, so there it is built slot
+        by slot."""
+        n = max(map(len, lists.values()))
+        if stages is None:
+            return F.coalesce(hit, *[F.try_to_timestamp(s, F.get(cand, k)) for k in range(n)])
+        hit, s, cand = (f"`{v._jc.toString()}`" for v in (hit, s, cand))
+        slots = ", ".join(f"try_to_timestamp({s}, get({cand}, {k}))" for k in range(n))
+        return F.expr(f"coalesce({hit}, {slots})")
 
     return let(c, lambda c:
         let(F.try_to_timestamp(c, F.lit(first)), lambda r0:
-        let(F.when(r0.isNull(), _candidates(c, rest)), lambda cand_raw:
-        let(F.coalesce(r0, *attempts(c, cand_raw, len(rest))), lambda raw:
+        let(F.when(r0.isNull(), _candidates(c, raw_lists)), lambda cand_raw:
+        let(attempts(r0, c, cand_raw, raw_lists), lambda raw:
         let(F.when(raw.isNull(), _prenormalize(c)), lambda p:
-        let(F.when(p.isNotNull(), _candidates(p, DATETIME_LAYOUTS)), lambda cand_p:
-        F.coalesce(raw, *attempts(p, cand_p, len(DATETIME_LAYOUTS)))))))))  # fmt: skip
+        let(F.when(p.isNotNull(), _candidates(p, p_lists)), lambda cand_p:
+        attempts(raw, p, cand_p, p_lists)))))))  # fmt: skip
 
 
 def epoch_to_timestamp(col: Column | str, time_unit: float = 1.0) -> Column:

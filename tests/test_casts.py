@@ -618,3 +618,67 @@ def test_datetime_projection_stays_in_whole_stage_codegen(spark):
         sizes = [stats.apply(i)._3().maxMethodCodeSize() for i in range(stats.size())]
     assert len(rows) == 300 and all(r.time is not None for r in rows)
     assert sizes and max(sizes) <= 8000, sizes
+
+
+# the perfbench drain task and a FIXTURES.md F1 table, as config dims
+_DRAIN_TASK_DIMS = (
+    ("event_id", "Int64", None),
+    ("time", "DateTime", "ts"),
+    ("user_id", "UInt16", None),
+    ("name", "String", "event_type"),
+    ("value", "Nullable(Float32)", None),
+    ("props", "String", None),
+)
+_F1_TASK_DIMS = (
+    ("time", "DateTime", None),
+    ("name", "String", None),
+    ("value", "Float32", None),
+    ("price", "Decimal32(3)", None),
+)
+
+
+@pytest.mark.parametrize(
+    "dims,key", [(_DRAIN_TASK_DIMS, "event_id"), (_F1_TASK_DIMS, "name")], ids=["drain", "f1"]
+)
+def test_micro_batch_stage_fits_the_jit_limit(spark, dims, key):
+    """A micro-batch of parse_stream → apply_projection → hash sharding
+    over 4 shards compiles (codegen fallback off), every operator but the
+    decode and its filter (``from_json`` has no codegen) sits under
+    WholeStageCodegen, and no generated method exceeds 8 000 bytecode
+    bytes.  Whole-stage codegen puts every column's cast into one method,
+    and HotSpot runs a method above that limit in the interpreter: with one
+    DateTime attempt slot per layout the drain task's method was 8 535
+    bytes."""
+    from clickhouse_sinker_spark.config import TaskConfig
+    from clickhouse_sinker_spark.operators.sharding import ShardingPolicy, add_shard_column
+    from clickhouse_sinker_spark.sources.schema import json_parse_schema, specs_from_task
+    from clickhouse_sinker_spark.streaming.pipeline import parse_stream
+
+    from .diff_util import session_conf
+
+    specs = specs_from_task(TaskConfig(name="jit", dims=dims))
+    ts = F.timestamp_seconds(F.lit(946684800) + F.col("id") * 7919)
+    ts_text = F.when(F.col("id") % 2 == 0, F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")).otherwise(
+        F.date_format(ts, "EEE, dd MMM yyyy HH:mm:ss 'GMT'")
+    )
+    message = F.format_string(
+        '{"event_id": %d, "ts": "%s", "time": "%s", "user_id": %d, "event_type": "e%d",'
+        ' "name": "n%d", "value": %d.5, "price": %d.125, "props": "{}"}',
+        "id", ts_text, ts_text, F.col("id") * 1000, "id", "id", "id", "id",
+    )
+    raw = spark.range(300).select(
+        F.lit("t").alias("topic"), F.lit(0).alias("partition"), F.col("id").alias("offset"),
+        F.lit(None).cast("binary").alias("key"), message.cast("binary").alias("value"),
+        F.timestamp_seconds(F.lit(0)).alias("timestamp"),
+    )
+    with session_conf(spark, {"spark.sql.codegen.fallback": "false"}):
+        projected = apply_projection(parse_stream(raw, json_parse_schema(specs)), specs)
+        out = add_shard_column(projected, ShardingPolicy(key=key), 4)
+        rows = out.collect()
+        plan = out._jdf.queryExecution().executedPlan()
+        operators = [ln.lstrip(" +-:") for ln in plan.toString().splitlines()]
+        assert all(op.startswith("*(") for op in operators if "from_json(" not in op), plan.toString()
+        stats = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+        sizes = [stats.apply(i)._3().maxMethodCodeSize() for i in range(stats.size())]
+    assert len(rows) == 300 and all(r.time is not None for r in rows)
+    assert sizes and max(sizes) <= 8000, sizes
