@@ -500,28 +500,21 @@ def parse_datetime_any(col: Column | str, stages: DateTimeStages | None = None) 
     let = stages._let if stages is not None else _let_in_lambda
     first, rest = DATETIME_LAYOUTS[0], DATETIME_LAYOUTS[1:]
     raw_lists, p_lists = _candidate_lists(rest), _candidate_lists(DATETIME_LAYOUTS)
+    # one slot per member of the longest candidate list; a slot past the
+    # end of a row's list has a NULL format and costs nothing
+    n_raw, n_p = (max(map(len, lists.values())) for lists in (raw_lists, p_lists))
+    slots = [F.lit(k) for k in range(max(n_raw, n_p))]
 
-    def attempts(hit: Column, s: Column, cand: Column, lists: dict) -> Column:
-        """``coalesce(hit, try_to_timestamp(s, cand[0]), …)`` with one slot
-        per member of the longest candidate list; a slot past the end of
-        ``cand`` has a NULL format and costs nothing.  With ``stages`` the
-        arguments are helper columns, named in one SQL text; a lambda
-        variable has no name SQL text can read, so there it is built slot
-        by slot."""
-        n = max(map(len, lists.values()))
-        if stages is None:
-            return F.coalesce(hit, *[F.try_to_timestamp(s, F.get(cand, k)) for k in range(n)])
-        hit, s, cand = (f"`{v._jc.toString()}`" for v in (hit, s, cand))
-        slots = ", ".join(f"try_to_timestamp({s}, get({cand}, {k}))" for k in range(n))
-        return F.expr(f"coalesce({hit}, {slots})")
+    def attempts(s: Column, cand: Column, n: int) -> list[Column]:
+        return [F.try_to_timestamp(s, F.get(cand, k)) for k in slots[:n]]
 
     return let(c, lambda c:
         let(F.try_to_timestamp(c, F.lit(first)), lambda r0:
         let(F.when(r0.isNull(), _candidates(c, raw_lists)), lambda cand_raw:
-        let(attempts(r0, c, cand_raw, raw_lists), lambda raw:
+        let(F.coalesce(r0, *attempts(c, cand_raw, n_raw)), lambda raw:
         let(F.when(raw.isNull(), _prenormalize(c)), lambda p:
         let(F.when(p.isNotNull(), _candidates(p, p_lists)), lambda cand_p:
-        attempts(raw, p, cand_p, p_lists)))))))  # fmt: skip
+        F.coalesce(raw, *attempts(p, cand_p, n_p))))))))  # fmt: skip
 
 
 def epoch_to_timestamp(col: Column | str, time_unit: float = 1.0) -> Column:

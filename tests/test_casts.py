@@ -584,43 +584,53 @@ def test_shape_directed_parse_matches_chain(spark, conf):
     assert sum(r[2] is not None for r in with_ts) > len(with_ts) // 2
 
 
-def test_datetime_projection_stays_in_whole_stage_codegen(spark):
-    """apply_projection of a string ``ts`` → NOT NULL DateTime compiles
-    (codegen fallback off, so a janino failure like "Code grows beyond
-    64 KB" raises instead of running interpreted), every Project and the
-    null-reject Filter sit under WholeStageCodegen, the Filter tests the
-    projected value rather than a re-inlined copy of the parse, and no
-    generated method exceeds HotSpot's 8000-byte JIT limit (the 30-attempt
-    chain compiled to a ~17 KB method, which the JVM runs interpreted)."""
+def _ts_text(id_col: str = "id"):
+    """A timestamp string per row: RFC3339 for even ids (layout 0, the hot
+    path), an RFC1123 day-name string for odd ones (the normalised path)."""
+    ts = F.timestamp_seconds(F.lit(946684800) + F.col(id_col) * 7919)
+    return F.when(F.col(id_col) % 2 == 0, F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")).otherwise(
+        F.date_format(ts, "EEE, dd MMM yyyy HH:mm:ss 'GMT'")
+    )
+
+
+def _compiled_within_jit_limit(spark, build):
+    """Collect ``build()`` with codegen fallback off (so a janino failure
+    like "Code grows beyond 64 KB" raises instead of running interpreted),
+    assert that no generated method exceeds HotSpot's 8 000-byte JIT limit
+    (the JVM runs a larger method in the interpreter), and return the rows
+    and the executed plan's operator lines."""
     from .diff_util import session_conf
 
+    with session_conf(spark, {"spark.sql.codegen.fallback": "false"}):
+        out = build()
+        rows = out.collect()
+        plan = out._jdf.queryExecution().executedPlan()
+        stats = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
+        sizes = [stats.apply(i)._3().maxMethodCodeSize() for i in range(stats.size())]
+    assert sizes and max(sizes) <= 8000, sizes
+    return rows, plan.toString().splitlines()
+
+
+def test_datetime_projection_stays_in_whole_stage_codegen(spark):
+    """apply_projection of a string ``ts`` → NOT NULL DateTime compiles,
+    every Project and the null-reject Filter sit under WholeStageCodegen,
+    the Filter tests the projected value rather than a re-inlined copy of
+    the parse, and no generated method exceeds the JIT limit (the
+    30-attempt chain compiled to a ~17 KB method)."""
     specs = [
         ColumnSpec("time", "DateTime", source="ts", not_nullable=True),
         ColumnSpec("id", "Int64", not_nullable=True),
     ]
-    ts = F.timestamp_seconds(F.lit(946684800) + F.col("id") * 7919)
-    df = spark.range(300).select(
-        "id",
-        F.when(F.col("id") % 2 == 0, F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-        .otherwise(F.date_format(ts, "EEE, dd MMM yyyy HH:mm:ss 'GMT'"))
-        .alias("ts"),
-    )
-    with session_conf(spark, {"spark.sql.codegen.fallback": "false"}):
-        out = apply_projection(df, specs)
-        rows = out.collect()
-        plan = out._jdf.queryExecution().executedPlan()
-        lines = plan.toString().splitlines()
-        projects = [ln for ln in lines if "Project [" in ln]
-        filters = [ln for ln in lines if "Filter " in ln]
-        assert projects and all("*(" in ln for ln in projects + filters), plan.toString()
-        assert filters and not any("gettimestamp" in ln for ln in filters), filters
-        stats = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
-        sizes = [stats.apply(i)._3().maxMethodCodeSize() for i in range(stats.size())]
+    df = spark.range(300).select("id", _ts_text().alias("ts"))
+    rows, lines = _compiled_within_jit_limit(spark, lambda: apply_projection(df, specs))
+    projects = [ln for ln in lines if "Project [" in ln]
+    filters = [ln for ln in lines if "Filter " in ln]
+    assert projects and all("*(" in ln for ln in projects + filters), lines
+    assert filters and not any("gettimestamp" in ln for ln in filters), filters
     assert len(rows) == 300 and all(r.time is not None for r in rows)
-    assert sizes and max(sizes) <= 8000, sizes
 
 
-# the perfbench drain task and a FIXTURES.md F1 table, as config dims
+# the perfbench drain task, as config dims
 _DRAIN_TASK_DIMS = (
     ("event_id", "Int64", None),
     ("time", "DateTime", "ts"),
@@ -629,56 +639,37 @@ _DRAIN_TASK_DIMS = (
     ("value", "Nullable(Float32)", None),
     ("props", "String", None),
 )
-_F1_TASK_DIMS = (
-    ("time", "DateTime", None),
-    ("name", "String", None),
-    ("value", "Float32", None),
-    ("price", "Decimal32(3)", None),
-)
 
 
-@pytest.mark.parametrize(
-    "dims,key", [(_DRAIN_TASK_DIMS, "event_id"), (_F1_TASK_DIMS, "name")], ids=["drain", "f1"]
-)
-def test_micro_batch_stage_fits_the_jit_limit(spark, dims, key):
-    """A micro-batch of parse_stream → apply_projection → hash sharding
-    over 4 shards compiles (codegen fallback off), every operator but the
-    decode and its filter (``from_json`` has no codegen) sits under
-    WholeStageCodegen, and no generated method exceeds 8 000 bytecode
-    bytes.  Whole-stage codegen puts every column's cast into one method,
-    and HotSpot runs a method above that limit in the interpreter: with one
-    DateTime attempt slot per layout the drain task's method was 8 535
-    bytes."""
+def test_micro_batch_stage_fits_the_jit_limit(spark):
+    """A drain-shaped micro-batch, parse_stream → apply_projection → hash
+    sharding over 4 shards, compiles, every operator but the decode and its
+    filter (``from_json`` has no codegen) sits under WholeStageCodegen, and
+    no generated method exceeds the JIT limit.  Whole-stage codegen puts
+    every column's cast into one method: with one DateTime attempt slot per
+    layout that method was 8 535 bytes."""
     from clickhouse_sinker_spark.config import TaskConfig
     from clickhouse_sinker_spark.operators.sharding import ShardingPolicy, add_shard_column
     from clickhouse_sinker_spark.sources.schema import json_parse_schema, specs_from_task
     from clickhouse_sinker_spark.streaming.pipeline import parse_stream
 
-    from .diff_util import session_conf
-
-    specs = specs_from_task(TaskConfig(name="jit", dims=dims))
-    ts = F.timestamp_seconds(F.lit(946684800) + F.col("id") * 7919)
-    ts_text = F.when(F.col("id") % 2 == 0, F.date_format(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'")).otherwise(
-        F.date_format(ts, "EEE, dd MMM yyyy HH:mm:ss 'GMT'")
-    )
+    specs = specs_from_task(TaskConfig(name="jit", dims=_DRAIN_TASK_DIMS))
     message = F.format_string(
-        '{"event_id": %d, "ts": "%s", "time": "%s", "user_id": %d, "event_type": "e%d",'
-        ' "name": "n%d", "value": %d.5, "price": %d.125, "props": "{}"}',
-        "id", ts_text, ts_text, F.col("id") * 1000, "id", "id", "id", "id",
+        '{"event_id": %d, "ts": "%s", "user_id": %d, "event_type": "e%d",'
+        ' "value": %d.5, "props": "{}"}',
+        "id", _ts_text(), F.col("id") * 1000, "id", "id",
     )
     raw = spark.range(300).select(
         F.lit("t").alias("topic"), F.lit(0).alias("partition"), F.col("id").alias("offset"),
         F.lit(None).cast("binary").alias("key"), message.cast("binary").alias("value"),
         F.timestamp_seconds(F.lit(0)).alias("timestamp"),
     )
-    with session_conf(spark, {"spark.sql.codegen.fallback": "false"}):
+
+    def build():
         projected = apply_projection(parse_stream(raw, json_parse_schema(specs)), specs)
-        out = add_shard_column(projected, ShardingPolicy(key=key), 4)
-        rows = out.collect()
-        plan = out._jdf.queryExecution().executedPlan()
-        operators = [ln.lstrip(" +-:") for ln in plan.toString().splitlines()]
-        assert all(op.startswith("*(") for op in operators if "from_json(" not in op), plan.toString()
-        stats = spark._jvm.org.apache.spark.sql.execution.debug.package.codegenStringSeq(plan)
-        sizes = [stats.apply(i)._3().maxMethodCodeSize() for i in range(stats.size())]
+        return add_shard_column(projected, ShardingPolicy(key="event_id"), 4)
+
+    rows, lines = _compiled_within_jit_limit(spark, build)
+    operators = [ln.lstrip(" +-:") for ln in lines]
+    assert all(op.startswith("*(") for op in operators if "from_json(" not in op), lines
     assert len(rows) == 300 and all(r.time is not None for r in rows)
-    assert sizes and max(sizes) <= 8000, sizes
