@@ -21,9 +21,10 @@ reference's parser_test matrix):
   numbers scaled by a time unit; out-of-range → Epoch
   (parser/parser.go:31-65,204-226): ``parse_datetime_any``,
   ``epoch_to_timestamp``.  The layout parse is staged and shape-directed:
-  each string is tried only in the layouts its first and third characters
-  admit, and the day-name-normalised form is computed once per row, in a
-  helper column (``DateTimeStages``).
+  each string is tried only in the layouts its shape key admits (its first
+  character, and a few characters after its leading digits), and the
+  day-name-normalised form is computed once per row, in a helper column
+  (``DateTimeStages``).
 - IP strings validated, invalid → 0.0.0.0 / :: (parser/fastjson.go:739-785):
   ``valid_ip_or_default``.
 
@@ -36,6 +37,7 @@ from __future__ import annotations
 import datetime as _dt
 import itertools
 import re
+import string
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame
@@ -272,62 +274,78 @@ DATETIME_LAYOUTS = [
     "dd-MMM-yy HH:mm:ss XXX",                 # RFC850   (after strip)
 ]
 
-_LETTERS = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
+# Spark parses case-insensitively, and Java's case-insensitive character
+# match also pairs these four with an ASCII letter ('ſep' reads as 'Sep')
+_LETTERS = string.ascii_letters + "\u0130\u0131\u017f\u212a"  # İ ı ſ, Kelvin K
 _DIGITS = "0123456789"
+# A string's shape key: the class of its first character, then the classes
+# of its rest at these offsets, where the rest is the string after its
+# leading run of signs and digits (so a year of any width shifts nothing).
+_LEAD = "+-" + _DIGITS
+_KEY_AT = (0, 3, 7)
 
 
 def _char_class(ch: str) -> str:
-    """'a' for an ASCII letter, 'd' for an ASCII digit, else ``ch`` itself
-    (the per-character map of ``_shape_signature``)."""
+    """'a' for a letter, 'd' for an ASCII digit, else ``ch`` itself (the
+    per-character map of ``_shape_signature``)."""
     return "a" if ch in _LETTERS else "d" if ch in _DIGITS else ch
 
 
-def _layout_shape(fmt: str) -> tuple[str | None, bool]:
-    """The shape signature (class of the 1st char + class of the 3rd char)
-    of every unsigned string ``fmt`` can parse, or None if the pattern
-    leaves it open; and whether its leading field is a year that may carry
-    a sign.
+def _layout_shape(fmt: str) -> frozenset[str]:
+    """The shape keys of the strings ``fmt`` can parse.
 
-    Walks the pattern's leading fields: literals and the fixed-width
-    numbers (``yy``, ``MM``, ``dd``, ``HH``, ``mm``, ``ss``) have a known
-    width; a one-letter number is 1-2 digits, ``yyyy`` at least 4 digits
-    and ``MMM`` at least 3 letters (Locale.US month names), after which
-    positions depend on the value.  A year of other than 2 letters may be
-    signed (``+12024``, ``-0001``): leading, it lets the layout parse
-    sign-led strings, whose signature no layout has; after the start it
-    stops the walk."""
-    classes: list[str] = []
-    signed = False
+    Walks the pattern field by field, spelling each field's possible
+    classes: literals as themselves; ``yy``, ``MM``, ``dd``, ``HH``, ``mm``
+    and ``ss`` as 2 digits; ``MMM`` as 3 letters (Locale.US month
+    abbreviations); ``yyyy`` as 4 digits, or a sign and 4 or more; ``d`` as
+    1 or more digits (Spark's strict parse, pinned by the differential
+    test).  An optional section, a zone, a fraction or any other field
+    leaves the rest of the string open, which is fine as long as no key
+    offset falls there; a pattern whose key it would leave open is an
+    error."""
+    width = max(_KEY_AT) + 2  # every wider number spells the same keys
+    spellings = [""]
+    closed = True
     for m in re.finditer(r"'([^']*)'|([A-Za-z])\2*|(.)", fmt):
         quoted, letter, lit = m.groups()
         n = len(m.group(0))
-        if lit == "[" or quoted == "":  # an optional section or an escaped quote
-            break
+        options = None  # an optional section, an escaped quote, a zone …
         if letter is None:
-            classes += [_char_class(ch) for ch in quoted or lit]
-        elif letter == "M" and n >= 3:
-            classes += ["a"] * 3
+            if lit != "[" and quoted != "":
+                options = ["".join(map(_char_class, quoted or lit))]
+        elif letter == "M" and n == 3:
+            options = ["aaa"]
+        elif letter == "y" and n == 4:
+            options = ["dddd"] + [s + "d" * w for s in "+-" for w in range(4, width)]
+        elif letter == "d" and n == 1:
+            options = ["d" * w for w in range(1, width)]
+        elif letter in "yMdHms" and n == 2:
+            options = ["dd"]
+        if options is None:
+            closed = False
             break
-        elif letter not in "yMdHms" or (letter == "y" and n != 2 and classes):
-            break  # zone, fraction, day name …, or a year that may be signed
-        else:
-            signed = letter == "y" and n != 2
-            classes += ["d"] * n
-            if n != 2:
-                break
-    return (classes[0] + classes[2] if len(classes) >= 3 else None), signed
+        spellings = [s + o for s in spellings for o in options]
+    keys = set()
+    for s in spellings:
+        rest = s.lstrip("+-d")
+        if not s or (not closed and len(rest) <= max(_KEY_AT)):
+            raise ValueError(f"no shape key for the layout {fmt!r}")
+        keys.add(s[0] + "".join(rest[k : k + 1] for k in _KEY_AT))
+    return frozenset(keys)
 
 
-# one row per layout: the shape of the unsigned strings it can parse, and
-# whether it can parse a sign-led one
+# the shape keys of each layout
 _LAYOUT_SHAPES = {fmt: _layout_shape(fmt) for fmt in DATETIME_LAYOUTS}
 
 
 def _shape_signature(c: Column) -> Column:
-    """Per-row shape of a string: its 1st and 3rd characters, ASCII letters
-    mapped to 'a' and ASCII digits to 'd' (``_char_class`` in SQL)."""
+    """Per-row shape key of a string (``_layout_shape``): its first
+    character and its rest at ``_KEY_AT``, letters mapped to 'a' and ASCII
+    digits to 'd' (``_char_class`` in SQL); a character past the end is
+    empty."""
+    rest = F.ltrim(c, F.lit(_LEAD))
     return F.translate(
-        F.concat(F.substring(c, 1, 1), F.substring(c, 3, 1)),
+        F.concat(F.substring(c, 1, 1), *[F.substring(rest, k + 1, 1) for k in _KEY_AT]),
         _LETTERS + _DIGITS,
         "a" * len(_LETTERS) + "d" * len(_DIGITS),
     )
@@ -341,38 +359,46 @@ def _sql_str(s: str) -> str:
     return parts[0] if len(parts) == 1 else f"concat({', chr(39), '.join(parts)})"
 
 
-def _candidate_lists(layouts: list[str]) -> dict[str | None, list[str]]:
-    """The members of ``layouts`` that can match a string, in list order,
-    by the string's signature: for each recognised signature, the layouts
-    of that shape and those of open shape.  Under None, the list for every
-    other signature (a sign, a space, a non-ASCII 1st or 3rd character,
-    fewer than 3 characters): the layouts of open shape and those led by a
-    year that may be signed, the only ones that can parse a string of no
-    layout's shape (a string that starts with whitespace or a non-ASCII
-    character fails every layout).  A layout is left out only where the
-    string's 1st or 3rd character cannot be what the layout puts there."""
-    shapes = sorted({_LAYOUT_SHAPES[f][0] for f in layouts} - {None})
-    lists: dict[str | None, list[str]] = {
-        sig: [f for f in layouts if _LAYOUT_SHAPES[f][0] in (sig, None)] for sig in shapes
-    }
-    lists[None] = [f for f in layouts if _LAYOUT_SHAPES[f][0] is None or _LAYOUT_SHAPES[f][1]]
-    return lists
+def _candidate_lists() -> dict[str, list[str]]:
+    """The layouts that can match a string, in ``DATETIME_LAYOUTS`` order,
+    by the string's shape key, for each key some layout has; a string of
+    any other key matches no layout.  A layout is left out only where the
+    string's first character or its rest at ``_KEY_AT`` cannot be what the
+    layout puts there."""
+    keys = sorted(set().union(*_LAYOUT_SHAPES.values()))
+    return {key: [f for f in DATETIME_LAYOUTS if key in _LAYOUT_SHAPES[f]] for key in keys}
 
 
-def _candidates(c: Column, lists: dict[str | None, list[str]]) -> Column:
+def _candidates(c: Column, lists: dict[str, list[str]]) -> Column:
     """``c``'s candidate list from ``_candidate_lists``: a literal map from
-    each recognised signature to its list, the None list otherwise.  The
-    constants are SQL text, one parse each, not one py4j call per
-    element."""
+    each key to its list; NULL for any other key, so every attempt slot
+    has a NULL format.  The constants are SQL text, one parse each, not
+    one py4j call per element."""
 
     def array(fmts: list[str]) -> str:
         return f"array({', '.join(map(_sql_str, fmts))})"
 
-    by_shape = ", ".join(f"{_sql_str(sig)}, {array(fmts)}" for sig, fmts in lists.items() if sig)
-    return F.coalesce(
-        F.try_element_at(F.expr(f"map({by_shape})"), _shape_signature(c)),
-        F.expr(array(lists[None])),
-    )
+    by_shape = ", ".join(f"{_sql_str(key)}, {array(fmts)}" for key, fmts in lists.items())
+    return F.try_element_at(F.expr(f"map({by_shape})"), _shape_signature(c))
+
+
+def _digit_led(c: Column) -> Column:
+    """Whether ``c``'s first character is an ASCII digit (its shape key
+    leads with 'd'): at least "0" and below ":", the next character."""
+    return (c >= F.lit("0")) & (c < F.lit(":"))
+
+
+_DAY_NAMES = ("mon", "tue", "wed", "thu", "fri", "sat", "sun")
+
+
+def _day_led(c: Column) -> Column:
+    """Whether ``c``'s first three letters are, case-insensitively, a day
+    name: no layout reads a day name, and ``MMM`` reads only month names,
+    so no layout parses such a string before ``_prenormalize``.  Folds
+    ASCII case by ``translate``: ``lower`` loads Spark's Unicode case
+    mapping on first use, about a second and 370 MB of RSS per JVM."""
+    head = F.translate(F.substring(c, 1, 3), string.ascii_uppercase, string.ascii_lowercase)
+    return head.isin(*_DAY_NAMES)
 
 
 _DAYNAME_RE = r"^(Mon|Tue|Wed|Thu|Fri|Sat|Sun)[a-z]*,?\s+"
@@ -469,22 +495,26 @@ def parse_datetime_any(col: Column | str, stages: DateTimeStages | None = None) 
     detect-then-bind mode is ``detect_datetime_layout`` +
     ``parse_datetime_bound``).  A staged, shape-directed parse, all JVM-side:
 
-    1. ``r0``: the raw string in layout 0 (RFC3339, the ETL hot path).
-    2. If that fails, the raw string in the layouts its shape admits
-       (``_candidates``: first-character class and third character decide,
-       e.g. ``dd/MM/yyyy`` needs a '/' third; an unrecognised shape gets
-       only the layouts led by a year that may be signed).
+    1. ``r0``: a digit-led raw string in layout 0 (RFC3339, the ETL hot
+       path).
+    2. If that fails, the raw string in the layouts its shape key admits
+       (``_candidates``: the first character's class and the rest's
+       characters at ``_KEY_AT`` decide, e.g. ``dd/MM/yyyy`` puts '/'
+       first after the leading digits), layout 0 left out where ``r0``
+       tried it.  A day-name-led string (``_day_led``) has no raw
+       attempt.
     3. If none matches, ``p = _prenormalize(c)``, computed once, in the
-       layouts *its* shape admits.
+       layouts *its* shape key admits.
 
     Same result as trying all layouts raw and then all normalised (the
     test oracle): a layout is skipped only where it cannot match, and
     ``_prenormalize`` is strictly widening, so a raw hit is the result the
-    normalised attempts would give.  A day-name string costs ~4 failed
-    parses instead of ~27.
+    normalised attempts would give.  Each day-name family of the reference
+    (RFC1123, ANSIC, RFC850) costs one parse: its normalised form's key
+    leads with the layout that parses it.
 
-    Each stage has as many attempt slots as its longest candidate list (6
-    raw, 7 normalised), not one per layout: whole-stage codegen puts every
+    Each stage has as many attempt slots as its longest candidate list (3
+    raw, 3 normalised), not one per layout: whole-stage codegen puts every
     column of a projection into one generated method, and HotSpot does not
     JIT-compile a method above 8 000 bytecode bytes, so every slot counts
     against the whole micro-batch's budget.
@@ -498,8 +528,13 @@ def parse_datetime_any(col: Column | str, stages: DateTimeStages | None = None) 
     """
     c = F.col(col) if isinstance(col, str) else col
     let = stages._let if stages is not None else _let_in_lambda
-    first, rest = DATETIME_LAYOUTS[0], DATETIME_LAYOUTS[1:]
-    raw_lists, p_lists = _candidate_lists(rest), _candidate_lists(DATETIME_LAYOUTS)
+    first = DATETIME_LAYOUTS[0]
+    p_lists = _candidate_lists()
+    # r0 has tried layout 0 on every digit-led string
+    raw_lists = {
+        key: [f for f in fmts if f != first or key[0] != "d"]
+        for key, fmts in p_lists.items()
+    }
     # one slot per member of the longest candidate list; a slot past the
     # end of a row's list has a NULL format and costs nothing
     n_raw, n_p = (max(map(len, lists.values())) for lists in (raw_lists, p_lists))
@@ -509,8 +544,8 @@ def parse_datetime_any(col: Column | str, stages: DateTimeStages | None = None) 
         return [F.try_to_timestamp(s, F.get(cand, k)) for k in slots[:n]]
 
     return let(c, lambda c:
-        let(F.try_to_timestamp(c, F.lit(first)), lambda r0:
-        let(F.when(r0.isNull(), _candidates(c, raw_lists)), lambda cand_raw:
+        let(F.when(_digit_led(c), F.try_to_timestamp(c, F.lit(first))), lambda r0:
+        let(F.when(r0.isNull() & ~_day_led(c), _candidates(c, raw_lists)), lambda cand_raw:
         let(F.coalesce(r0, *attempts(c, cand_raw, n_raw)), lambda raw:
         let(F.when(raw.isNull(), _prenormalize(c)), lambda p:
         let(F.when(p.isNotNull(), _candidates(p, p_lists)), lambda cand_p:

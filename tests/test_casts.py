@@ -521,6 +521,28 @@ DT_HOSTILE = [
     "２０２４-01-05", "Ｍon, 02 Jan 2006 15:04:05 GMT", "2024/01/05", "20240105 03:04:05",
     "02 Jan 06 15:04 +0100", "02 Jan 06 15:04 +01:00", "Sept 2 15:04:05 2006",
     "Tue, 03 Jun 2025 10:00:00 +0200", "not a date", None,
+    # day-led strings whose rest is ISO or month-led (no raw attempt)
+    "Mon 2024-01-05T03:04:05Z", "Sun Jan 2 15:04:05 2006", "Fri, 2024-01-05 03:04:05",
+    "Sat 02-Jan-06 15:04:05 GMT", "Mon Jan 2 15:04:05 GMT+01:00 2006",
+    # full day and month names
+    "Monday, 02 Jan 2006 15:04:05 GMT", "Tuesday Jan 2 15:04:05 2006", "June 2 15:04:05 2006",
+    "Sunday, 02-June-06 15:04:05 GMT", "02 June 2006 15:04:05 +00:00", "Sept 02 2006",
+    # dd MMM yy against dd MMM yyyy at the key offsets, signed years mid-string
+    "02 Jan 2006 15:04 +01:00", "02 Jan 06 15:04:05 +01:00", "02 Jan 06 15:04 Z",
+    "02 Jan 2006 15:04:05 +0100", "02-Jan-2006 15:04:05 +00:00", "02 Jan +12006 15:04:05 +00:00",
+    "02 Jan -0001 15:04:05 Z", "02 Jan 12006 15:04:05 +00:00",
+    # unsigned 5-digit and signed leading years
+    "12024-01-05T00:00:00Z", "12024-01-05 03:04:05", "+12024-01-05 03:04:05",
+    "-2024-01-05T03:04:05+08:00", "-00001-01-05", "+120240105 03:04:05", "120240105 03:04:05",
+    "+2024-01-05T03:04:05Z", "-12024-01-05T03:04:05.5",
+    # mixed case, Java case folding ('ſ' matches 'S') and tabs at the key offsets
+    "2024-01-05t03:04:05z", "jAN 2 15:04:05 2006", "ſep 2 15:04:05 2006",
+    "02 ſep 2006 15:04:05 +00:00", "MON, 02 JAN 2006 15:04:05 GMT", "2024-01-05\t03:04:05",
+    "02\tJan 2006 15:04:05 +00:00", "Jan\t2 15:04:05 2006", "20240105\t03:04:05",
+    # a zone name that the normalised form breaks (only the raw attempt parses
+    # it), and day numbers of any width
+    "Jan 2 15:04:05 GMT+01:00 2006", "Jan 2 15:04:05 UT 2006", "Jan 002 15:04:05 2006",
+    "Jan 12 15:04:05 2006", "Jan 00002 15:04:05 MST 2006",
 ]
 
 DT_SESSIONS = [
